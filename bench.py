@@ -116,14 +116,9 @@ def streaming_events_windows(spark) -> float:
         # derived_stream_partitions — each state partition costs one
         # state-store commit per micro-batch regardless of rows; clamped
         # to the session default so the low-core bench pass and cluster
-        # sessions keep full parallelism).  ETIELLE_STREAM_PARTS=session
-        # restores the r10 form for the tools/ab_cold.py adjudication.
+        # sessions keep full parallelism).
         old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        parts = (
-            int(old_parts)
-            if os.environ.get("ETIELLE_STREAM_PARTS", "derived") == "session"
-            else derived_stream_partitions(spark, rows_per_batch)
-        )
+        parts = derived_stream_partitions(spark, rows_per_batch)
 
         t0 = time.perf_counter()
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))

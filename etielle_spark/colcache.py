@@ -54,9 +54,10 @@ def bq(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def is_plain(name: str) -> bool:
-    """True when ``name`` is a plain identifier whose SQL-text reference
-    is exactly equivalent to ``F.col(name)`` (no dots — dotted names mean
-    nested access in both forms, but quoting rules differ; stay on the
-    Column path for anything unusual)."""
-    return name.isidentifier() and not name.startswith("__etielle_variant")
+def qcol(name: str) -> Column:
+    """``F.col`` of the LITERAL column ``name``: a dot is part of the
+    name, not nested-field access.  For a plain identifier it is the
+    same unresolved attribute as ``F.col(name)`` (same plan, same single
+    py4j trip); the string form for ``select``/``groupBy`` is
+    ``bq(name)``."""
+    return F.col(bq(name))

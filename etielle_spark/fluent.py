@@ -40,7 +40,7 @@ from .core import (
     resolve_path,
     strip_marker_fields,
 )
-from .colcache import bq, cexpr, is_plain
+from .colcache import bq, cexpr, qcol
 from .models import is_model_class, spark_schema_of, table_name_of
 from .policies import LastWriteWinsPolicy, MergePolicy
 from .telemetry import (
@@ -354,31 +354,18 @@ def _root_env(
     elif isinstance(root, DataFrame):
         # the order column is arrival metadata, not part of the document
         node_cols = [c for c in root.columns if c != order_col]
-        if node_cols and all(is_plain(c) for c in node_cols) and (
-            order_col is None or is_plain(order_col)
-        ):
-            # memoized SQL text: 2 cached expressions instead of
-            # ~(2 x n_cols + 6) py4j trips, re-used across micro-batch
-            # compiles of the same schema (round 11, guide §7.3)
-            ord_text = (
-                f"CAST({bq(order_col)} AS BIGINT) AS __roword"
-                if order_col
-                else "CAST(0 AS BIGINT) AS __roword"
-            )
-            df = root.select(
-                cexpr(
-                    "struct(" + ", ".join(bq(c) for c in node_cols) + ") AS __n0"
-                ),
-                cexpr(ord_text),
-            )
-        else:
-            row_ord = (
-                F.col(order_col).cast("long") if order_col else F.lit(0).cast("long")
-            )
-            df = root.select(
-                F.struct(*[F.col(c) for c in node_cols]).alias("__n0"),
-                row_ord.alias("__roword"),
-            )
+        # memoized SQL text: 2 cached expressions instead of
+        # ~(2 x n_cols + 6) py4j trips, re-used across micro-batch
+        # compiles of the same schema (round 11, guide §7.3)
+        ord_text = (
+            f"CAST({bq(order_col)} AS BIGINT) AS __roword"
+            if order_col
+            else "CAST(0 AS BIGINT) AS __roword"
+        )
+        df = root.select(
+            cexpr("struct(" + ", ".join(bq(c) for c in node_cols) + ") AS __n0"),
+            cexpr(ord_text),
+        )
         dtype = T.StructType([f for f in root.schema.fields if f.name != order_col])
         if cache is not None:
             cache[key] = (df, dtype)
@@ -862,8 +849,8 @@ class PipelineResult:
             have = set(internal.columns)
             use_keys = [k for k in keys if k in have]
             sel = [
-                F.col(k).alias(f"__k_{i}") for i, k in enumerate(use_keys)
-            ] + [F.col(i).alias(pub) for pub, i in pairs if i in have]
+                qcol(k).alias(f"__k_{i}") for i, k in enumerate(use_keys)
+            ] + [qcol(i).alias(pub) for pub, i in pairs if i in have]
             out = {}
             for r in internal.orderBy(_SEQ).select(*sel).collect():
                 d = r.asDict(recursive=True)
@@ -885,7 +872,7 @@ class PipelineResult:
             # relationship-added columns (fk/backlink attrs) are present in
             # the internal frame under their public names already
             have = set(df.columns)
-            sel = [F.col(i).alias(pub) for pub, i in pairs if i in have]
+            sel = [qcol(i).alias(pub) for pub, i in pairs if i in have]
             return [
                 {k: _plain_py(v) for k, v in r.asDict(recursive=True).items()}
                 for r in df.select(*sel).collect()
@@ -948,7 +935,7 @@ class PipelineResult:
         df = self._tables_dict[name]
         use = list(cols) if cols else df.columns
         out = set()
-        for r in df.select(*use).collect():
+        for r in df.select(*[bq(c) for c in use]).collect():
             out.add(tuple(_freeze(_plain_py(v)) for v in r))
         return out
 
@@ -1633,29 +1620,15 @@ def _null_empty_key_filter(df: DataFrame, keys: list[str]) -> DataFrame:
     Variant-typed keys (string/number-mixed fields) test emptiness on
     their JSON form — ``""`` is the empty STRING key; numeric 0 and
     ``"0"`` are valid keys."""
-    # SQL-text predicate when every key is a plain identifier: ONE py4j
-    # round trip instead of ~6 per key (the fluent compile is
-    # driver-latency-bound; round 11, guide §7.3)
-    if all(is_plain(k) for k in keys):
-        parts = []
-        for k in keys:
-            if isinstance(df.schema[k].dataType, T.VariantType):
-                parts.append(
-                    f"({bq(k)} IS NOT NULL AND to_json({bq(k)}) <> '\"\"')"
-                )
-            else:
-                parts.append(
-                    f"({bq(k)} IS NOT NULL AND CAST({bq(k)} AS STRING) <> '')"
-                )
-        return df.filter(" AND ".join(parts)) if parts else df
-    cond = F.lit(True)
+    # SQL-text predicate: ONE py4j round trip instead of ~6 per key (the
+    # fluent compile is driver-latency-bound; round 11, guide §7.3)
+    parts = []
     for k in keys:
-        c = F.col(k)
         if isinstance(df.schema[k].dataType, T.VariantType):
-            cond = cond & c.isNotNull() & (F.to_json(c) != F.lit('""'))
+            parts.append(f"({bq(k)} IS NOT NULL AND to_json({bq(k)}) <> '\"\"')")
         else:
-            cond = cond & c.isNotNull() & (c.cast("string") != F.lit(""))
-    return df.filter(cond)
+            parts.append(f"({bq(k)} IS NOT NULL AND CAST({bq(k)} AS STRING) <> '')")
+    return df.filter(" AND ".join(parts)) if parts else df
 
 
 # escape hatch for the single-emission merge fast path (tests flip it to
@@ -1816,7 +1789,7 @@ def _assemble_table(
         )
         if hinted and _VERIFY_DISTINCT_HINTS:
             dup = (
-                df.groupBy(*[F.col(k) for k in join_on])
+                df.groupBy(*[qcol(k) for k in join_on])
                 .count()
                 .filter(F.col("count") > 1)
                 .limit(1)
@@ -1831,7 +1804,7 @@ def _assemble_table(
         if skip_merge:
             parts.append(
                 df.select(
-                    *[n if is_plain(n) else F.col(n) for n in field_order],
+                    *[bq(n) for n in field_order],
                     _ORD,
                 )
             )
@@ -1869,14 +1842,12 @@ def _assemble_table(
             # compiles pay this every batch; round 11, guide §7.3)
             aggs.extend(
                 cexpr(f"max_by({bq(n)}, {ord_text}) AS {bq(n)}")
-                if is_plain(n)
-                else F.max_by(F.col(n), ord_col).alias(n)
                 for n in lww_fields
             )
         elif lww_fields:
             aggs.append(
                 F.max_by(
-                    F.struct(*[F.col(n).alias(n) for n in lww_fields]),
+                    F.struct(*[qcol(n).alias(n) for n in lww_fields]),
                     ord_col,
                 ).alias("__row")
             )
@@ -1884,17 +1855,17 @@ def _assemble_table(
             if name in policies:
                 aggs.append(
                     policies[name]
-                    .agg(F.col(name), ord_col, df.schema[name].dataType)
+                    .agg(qcol(name), ord_col, df.schema[name].dataType)
                     .alias(name)
                 )
         aggs.append(cexpr(f"min({bq(_ORD)}) AS {bq(_ORD)}"))
         # groupBy/select take NAME STRINGS (same resolution as F.col,
         # zero py4j trips per column)
-        grouped = df.groupBy(*join_on).agg(*aggs)
+        grouped = df.groupBy(*[bq(k) for k in join_on]).agg(*aggs)
         sel = [
             F.col("__row").getField(n).alias(n)
             if n in lww_fields and not atomic_lww
-            else n
+            else bq(n)
             for n in field_order
         ]
         parts.append(grouped.select(*sel, _ORD))
@@ -1915,7 +1886,7 @@ def _assemble_table(
             cols = [F.col(_ORD)]
             for name in field_order:
                 if name in declared:
-                    cols.append(F.col(name))
+                    cols.append(qcol(name))
                 else:
                     cols.append(F.lit(None).alias(name))
                 if name in supplies_value:
@@ -1935,7 +1906,7 @@ def _assemble_table(
                 continue
             pol = policies.get(name, LastWriteWinsPolicy())
             dtype = unioned.schema[name].dataType
-            aggs.append(pol.agg(F.col(name), F.col(f"__o_{name}"), dtype).alias(name))
+            aggs.append(pol.agg(qcol(name), qcol(f"__o_{name}"), dtype).alias(name))
         aggs.append(F.min(F.col(_ORD)).alias(_ORD))
 
         # variant-typed keys (string/number-mixed fields) can't feed
@@ -1946,11 +1917,11 @@ def _assemble_table(
         key_exprs, key_restore = [], []
         for k in join_on:
             if isinstance(unioned.schema[k].dataType, T.VariantType):
-                key_exprs.append(F.to_json(F.col(k)).alias(f"__kc_{k}"))
-                key_restore.append(F.parse_json(F.col(f"__kc_{k}")).alias(k))
+                key_exprs.append(F.to_json(qcol(k)).alias(f"__kc_{k}"))
+                key_restore.append(F.parse_json(qcol(f"__kc_{k}")).alias(k))
             else:
-                key_exprs.append(F.col(k))
-                key_restore.append(F.col(k))
+                key_exprs.append(qcol(k))
+                key_restore.append(qcol(k))
         grouped = unioned.groupBy(*key_exprs).agg(*aggs)
         # restore variant keys AND declared column order in ONE select
         # (each DataFrame op is a py4j round trip + a full plan
@@ -1958,7 +1929,7 @@ def _assemble_table(
         restore_by_key = dict(zip(join_on, key_restore))
         grouped = grouped.select(
             *[
-                restore_by_key[n] if n in restore_by_key else F.col(n)
+                restore_by_key[n] if n in restore_by_key else qcol(n)
                 for n in field_order
             ],
             F.col(_ORD),
@@ -1970,11 +1941,9 @@ def _assemble_table(
         cols = []
         for name in field_order:
             if name in supplied:
-                cols.append(name if is_plain(name) else F.col(name))
-            elif is_plain(name):
-                cols.append(cexpr(f"NULL AS {bq(name)}"))
+                cols.append(bq(name))
             else:
-                cols.append(F.lit(None).alias(name))
+                cols.append(cexpr(f"NULL AS {bq(name)}"))
         cols.append(_ORD)
         parts.append(df.select(*cols))
 
@@ -1991,24 +1960,16 @@ def _assemble_table(
     if join_on and len(join_on) == 1 and "id" not in [p for p, _ in public_pairs]:
         key0 = join_on[0]
         if "id" in temp_names:
-            inj = [
-                cexpr(f"{bq(key0)} AS __inj_id")
-                if is_plain(key0)
-                else F.col(key0).alias("__inj_id")
-            ]
+            inj = [cexpr(f"{bq(key0)} AS __inj_id")]
             public_pairs = [("id", "__inj_id")] + public_pairs
         else:
-            inj = [
-                cexpr(f"{bq(key0)} AS id")
-                if is_plain(key0)
-                else F.col(key0).alias("id")
-            ]
+            inj = [cexpr(f"{bq(key0)} AS id")]
             public_pairs = [("id", "id")] + public_pairs
 
     # id injection + the _ORD -> _SEQ rename in ONE select (py4j/analysis
     # latency; see the grouped-select fusion above)
     out = out.select(
-        *[c if is_plain(c) else F.col(c) for c in out.columns if c != _ORD],
+        *[bq(c) for c in out.columns if c != _ORD],
         *inj,
         cexpr(f"{bq(_ORD)} AS {bq(_SEQ)}"),
     )
@@ -2029,7 +1990,7 @@ def _assemble_table(
         casts = {}
         for fld in schema.fields:
             if fld.name in out.columns:
-                src = F.col(fld.name)
+                src = qcol(fld.name)
                 # try_cast keeps collect-mode semantics under ANSI sessions
                 # (plain cast would throw on the first bad value)
                 tgt = (
@@ -2075,14 +2036,14 @@ def _assemble_table(
         if checks:
             staged = out.select("*", *checks)
             err_cols = [c for c in staged.columns if c.startswith("__err")]
-            err_arr = F.array_compact(F.array(*[F.col(c) for c in err_cols]))
+            err_arr = F.array_compact(F.array(*[qcol(c) for c in err_cols]))
             # one select folds the __errs build and the check-column drop
             with_errs = staged.select(
-                *[c for c in staged.columns if not c.startswith("__err")],
+                *[bq(c) for c in staged.columns if not c.startswith("__err")],
                 err_arr.alias("__errs"),
             )
             key_col = (
-                F.concat_ws("|", *[F.col(k).cast("string") for k in join_on])
+                F.concat_ws("|", *[qcol(k).cast("string") for k in join_on])
                 if join_on
                 else F.lit(None)
             )
@@ -2106,8 +2067,8 @@ def _assemble_table(
             # re-analysis per cast field)
             def _cast_or_keep(name: str) -> Column:
                 if name not in casts:
-                    return F.col(name)
-                c = F.col(name)
+                    return qcol(name)
+                c = qcol(name)
                 casted = (
                     c.try_cast(schema[name].dataType)
                     if hasattr(c, "try_cast")
@@ -2123,12 +2084,8 @@ def _assemble_table(
 
 
 def _select_public(internal_df: DataFrame, pairs: list[tuple[str, str]]) -> DataFrame:
-    if all(is_plain(i) and is_plain(p) for p, i in pairs):
-        # memoized rename expressions: ~0 py4j trips on re-compiles
-        return internal_df.select(
-            *[cexpr(f"{bq(i)} AS {bq(p)}") for p, i in pairs]
-        )
-    return internal_df.select(*[F.col(i).alias(p) for p, i in pairs])
+    # memoized rename expressions: ~0 py4j trips on re-compiles
+    return internal_df.select(*[cexpr(f"{bq(i)} AS {bq(p)}") for p, i in pairs])
 
 
 _NUM_KINDS = ("BIGINT", "INT", "SMALLINT", "TINYINT", "DOUBLE", "FLOAT", "BOOLEAN")
@@ -2243,17 +2200,17 @@ def _apply_links(
 
         def child_key():
             return (
-                _key_canon(F.col(cf), cf_t) if variant_key else F.col(cf)
+                _key_canon(qcol(cf), cf_t) if variant_key else qcol(cf)
             )
 
         def parent_key():
             return (
-                _key_canon(F.col(pf), pf_t) if variant_key else F.col(pf)
+                _key_canon(qcol(pf), pf_t) if variant_key else qcol(pf)
             )
 
         if spec.fk:
             id_internal = dict(ppairs).get("id")
-            fk_src = F.col(id_internal) if id_internal else F.col(pf)
+            fk_src = qcol(id_internal) if id_internal else qcol(pf)
             # when multiple parents share a by-value the LAST one in
             # traversal-arrival order wins deterministically (the
             # reference's secondary index overwrites in arrival order,
@@ -2265,7 +2222,7 @@ def _apply_links(
                     F.col(_SEQ).alias("__lk_seq"),
                 )
                 .groupBy("__lk_pf")
-                .agg(F.max_by(F.col(spec.fk), F.col("__lk_seq")).alias(spec.fk))
+                .agg(F.max_by(qcol(spec.fk), F.col("__lk_seq")).alias(spec.fk))
             )
             joined = child_int.join(
                 F.broadcast(parent_side),
@@ -2281,18 +2238,18 @@ def _apply_links(
         if spec.required:
             parent_keys = parent_int.select(parent_key().alias("__lk_pf")).dropDuplicates()
             missing = (
-                child_int.filter(F.col(cf).isNotNull())
+                child_int.filter(qcol(cf).isNotNull())
                 .join(
                     F.broadcast(parent_keys),
                     child_key() == parent_keys["__lk_pf"],
                     "left_anti",
                 )
                 .select(
-                    F.col(cf).cast("string").alias("key"),
+                    qcol(cf).cast("string").alias("key"),
                     F.lit(cf).alias("field"),
                     F.concat(
                         F.lit(f"missing parent in '{spec.parent}' for {spec.child}.{cf}="),
-                        F.col(cf).cast("string"),
+                        qcol(cf).cast("string"),
                     ).alias("message"),
                     F.lit("link").alias("stage"),
                 )
@@ -2354,7 +2311,7 @@ def _apply_backlinks(
                     "etl(..., order_col=...)"
                 )
             rid_cols = [_SEQ]
-        child_struct = F.struct(*[F.col(i).alias(pub) for pub, i in cpairs])
+        child_struct = F.struct(*[qcol(i).alias(pub) for pub, i in cpairs])
         # string/number-mixed (variant) ids on either side: match on the
         # kind-preserving canonical form (Python equality — 7 pairs with
         # 7.0, never '7')
@@ -2365,14 +2322,14 @@ def _apply_backlinks(
             el_t, T.VariantType
         )
         child_key = (
-            _key_canon(F.col(cf), cf_t) if variant_ids else F.col(cf)
+            _key_canon(qcol(cf), cf_t) if variant_ids else qcol(cf)
         )
         child_side = child_int.select(
             child_key.alias("__bl_cid"), child_struct.alias("__bl_child")
         )
         exploded = parent_int.select(
-            *[F.col(c).alias(f"__bl_k_{i}") for i, c in enumerate(rid_cols)],
-            F.posexplode(F.col(plf)).alias("__bl_pos", "__bl_id"),
+            *[qcol(c).alias(f"__bl_k_{i}") for i, c in enumerate(rid_cols)],
+            F.posexplode(qcol(plf)).alias("__bl_pos", "__bl_id"),
         )
         if variant_ids:
             exploded = exploded.withColumn(
@@ -2427,7 +2384,7 @@ def _apply_backlinks(
         elem_type = collected.schema[spec.attr].dataType
         cond = None
         for i, c in enumerate(rid_cols):
-            piece = parent_int[c] == collected[f"__bl_k_{i}"]
+            piece = parent_int[bq(c)] == collected[f"__bl_k_{i}"]
             cond = piece if cond is None else (cond & piece)
         # ONE select instead of drop + two withColumns: every DataFrame
         # op is a py4j round trip + a JVM re-analysis of the whole plan,
@@ -2440,9 +2397,9 @@ def _apply_backlinks(
         # both exchanges where a broadcast would rebuild a parent-sized
         # hash relation per executor
         joined = parent_int.join(collected.hint("merge"), cond, "left").select(
-            *[parent_int[c] for c in parent_int.columns if c != spec.attr],
+            *[parent_int[bq(c)] for c in parent_int.columns if c != spec.attr],
             F.coalesce(
-                collected[spec.attr], F.array().cast(elem_type)
+                collected[bq(spec.attr)], F.array().cast(elem_type)
             ).alias(spec.attr),
         )
         internal[spec.parent] = joined

@@ -461,29 +461,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, *, bits: int = 32) -> Dat
         id_col, v.alias("__v")
     )
     # SQL-text per-bit aggregates: one parsed expression per bit column
-    # instead of ~6 py4j round trips each (same shift/mask arithmetic,
-    # exact integer sums).  ETIELLE_SIMHASH_FORM=columnapi restores the
-    # round-9 Column-API form for the round-11 cold-JVM adjudication A/B
-    # (tools/ab_cold.py) — both forms produce the identical physical plan.
-    import os as _os
-
-    if _os.environ.get("ETIELLE_SIMHASH_FORM", "sqltext") == "columnapi":
-        sums = per_tok.groupBy(id_col).agg(
-            *[
-                F.sum(
-                    F.shiftrightunsigned(F.col("__v"), bits - 1 - b)
-                    .bitwiseAND(F.lit(1))
-                    * 2
-                    - 1
-                ).alias(f"__s{b}")
-                for b in range(bits)
-            ]
-        )
-        bit_chars = [
-            F.when(F.col(f"__s{b}") > 0, F.lit("1")).otherwise(F.lit("0"))
-            for b in range(bits)
-        ]
-        return sums.select(F.col(id_col), F.concat(*bit_chars).alias("simhash"))
+    # instead of ~6 py4j round trips each (exact integer sums).
     sums = per_tok.groupBy(id_col).agg(
         *[
             F.expr(
@@ -604,17 +582,11 @@ def gram_duplication_stats(
     from pyspark import StorageLevel
 
     toks = df.select(F.col(id_col).alias("id"), tokens_col(F.col(text_col)).alias("t"))
-    # ETIELLE_GRAM_DIGEST=hex restores the pre-r10 32-char hex digest for
-    # the round-11 cold-JVM adjudication A/B (tools/ab_cold.py); the
-    # binary form halves the shuffled key (guide §2.3)
-    import os as _os
-
-    _dg = F.md5(F.col("gram"))
-    if _os.environ.get("ETIELLE_GRAM_DIGEST", "bin") != "hex":
-        _dg = F.unhex(_dg)
+    # the binary md5 digest (not its 32-char hex form) halves the
+    # shuffled key (guide §2.3)
     grams = toks.select(
         "id", F.explode(grams_of(F.col("t"), n)).alias("gram")
-    ).select("id", _dg.alias("g"))
+    ).select("id", F.unhex(F.md5(F.col("gram"))).alias("g"))
     # the persisted postings outlive this call (the returned frame is
     # lazy); registered with the cache registry so long-lived sessions
     # can release between stages — see caches.release_operator_caches

@@ -202,17 +202,12 @@ def connected_components_df(
     Returns ``(id, component)`` with ``component`` = the smallest id in
     the vertex's component, one row per vertex that appears in any edge.
     """
-    import os
-
     from pyspark import StorageLevel
 
     e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
     base = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
     spark = e.sparkSession
     cur_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # round-11 loop shape (A/B gate: ETIELLE_CC_LOOP=base restores the
-    # r10 form for cold-JVM adjudication via tools/ab_cold.py):
-    #
     # scale-adaptive LOOP partition count (guide §2.2): each round
     # shuffles one ~16-byte row per vertex/edge, so at the session
     # default (= core count locally, cluster-sized on a cluster) a
@@ -226,24 +221,14 @@ def connected_components_df(
     # concurrent queries submitted from other threads during the loop
     # would plan under the reduced value.
     #
-    # A DOUBLE pointer jump per round (ETIELLE_CC_LOOP=jump2/fast) was
-    # prototyped alongside: bit-identical labels and a win in warm
-    # same-session A/Bs (rounds 5 -> 3), but REFUTED under driver
-    # conditions — cold-JVM interleaved through the real q239 path it
-    # LOST 2 of 3 pairs (med-of-meds 11.48 vs 10.40 s): the extra
-    # label-frame self-join per round costs more in per-round plan
-    # construction, codegen and stage count than the dropped rounds
-    # save at this scale.  The gate values stay so the refutation is
-    # reproducible; the default runs a single jump.
-    mode = os.environ.get("ETIELLE_CC_LOOP", "parts")
-    adaptive_parts = mode in ("fast", "parts")
-    jumps = 2 if mode in ("fast", "jump2") else 1
-    if adaptive_parts:
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        n_sym = base.count()
-        loop_parts = min(cur_parts, max(4, -(-n_sym // 50_000)))
-    else:
-        loop_parts = cur_parts
+    # One pointer jump per round: a double jump was bit-identical but
+    # LOST 2 of 3 cold-JVM pairs through the real q239 path (the extra
+    # label-frame self-join per round costs more in plan construction,
+    # codegen and stages than the dropped rounds save at this scale;
+    # OPTIMIZATION_r11.md).
+    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    n_sym = base.count()
+    loop_parts = min(cur_parts, max(4, -(-n_sym // 50_000)))
 
     reliable = spark.sparkContext.getCheckpointDir() is not None
 
@@ -293,10 +278,9 @@ def connected_components_df(
         labels = _truncate(
             sym.select(F.col("s").alias("id")).distinct().withColumn("component", F.col("id"))
         )
-        if adaptive_parts:
-            # the labels action materialized sym; the pre-repartition
-            # frame's cache is now redundant
-            base.unpersist()
+        # the labels action materialized sym; the pre-repartition
+        # frame's cache is now redundant
+        base.unpersist()
 
         from pyspark.sql import Observation
 
@@ -324,22 +308,21 @@ def connected_components_df(
                     F.max("__old").alias("__old"),
                 )
             )
-            # pointer jump(s): labels are vertex ids, so l(l(v)) is one
-            # self-join of the candidate labels per hop
-            for _j in range(jumps):
-                parent = cand.select(
-                    F.col("id").alias("__pid"), F.col("component").alias("__pc")
-                )
-                cand = cand.join(
-                    parent, cand["component"] == parent["__pid"], "left"
-                ).select(
-                    cand["id"],
-                    F.least(
-                        cand["component"],
-                        F.coalesce(F.col("__pc"), cand["component"]),
-                    ).alias("component"),
-                    cand["__old"],
-                )
+            # pointer jump: labels are vertex ids, so l(l(v)) is one
+            # self-join of the candidate labels
+            parent = cand.select(
+                F.col("id").alias("__pid"), F.col("component").alias("__pc")
+            )
+            cand = cand.join(
+                parent, cand["component"] == parent["__pid"], "left"
+            ).select(
+                cand["id"],
+                F.least(
+                    cand["component"],
+                    F.coalesce(F.col("__pc"), cand["component"]),
+                ).alias("component"),
+                cand["__old"],
+            )
             obs = Observation()
             new_labels = _truncate(
                 cand.observe(

@@ -61,12 +61,18 @@ def get_spark(app_name: str = "etielle_spark", *, cpus: int | None = None) -> Sp
     # e.g. SPARK_GRAFT_EXTRA_CONF="spark.io.compression.codec=zstd;..." —
     # the parameterization seam for cluster-scale knobs (shuffle codec,
     # AQE advisory sizes) that a local bench cannot adjudicate, and for
-    # conf A/B experiments (tools/exp_conf_ab.py) without code edits
+    # conf A/B experiments without code edits (a tools/ab_cold.py
+    # variant "REV SPARK_GRAFT_EXTRA_CONF=k=v;...").  A pair without "="
+    # raises: a silently dropped knob would make a misconfigured A/B
+    # look real.
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for pair in filter(None, (p.strip() for p in extra.split(";"))):
         k, sep, v = pair.partition("=")
-        if sep:
-            builder = builder.config(k.strip(), v.strip())
+        if not sep or not k.strip():
+            raise ValueError(
+                f"SPARK_GRAFT_EXTRA_CONF: {pair!r} is not a key=value pair"
+            )
+        builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     ship_package(spark)
     return spark

@@ -23,6 +23,7 @@ from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..colcache import bq, qcol
 from ..fluent import (
     PipelineBuilder,
     PipelineResult,
@@ -96,11 +97,12 @@ class UpsertFlushStrategy(FlushStrategy):
         if old is None or not keys:
             KeyCompleteFlushStrategy().flush(store, name, df, keys)
             return
+        key_refs = [bq(k) for k in keys]
         if self.mode == "update":
-            kept_old = old.join(df.select(*keys).dropDuplicates(), keys, "left_anti")
+            kept_old = old.join(df.select(*key_refs).dropDuplicates(), keys, "left_anti")
             store.put(name, kept_old.unionByName(df, allowMissingColumns=True))
         else:
-            fresh = df.join(old.select(*keys).dropDuplicates(), keys, "left_anti")
+            fresh = df.join(old.select(*key_refs).dropDuplicates(), keys, "left_anti")
             store.put(name, old.unionByName(fresh, allowMissingColumns=True))
 
 
@@ -140,7 +142,8 @@ class BufferedKeyFlushStrategy(FlushStrategy):
         if not keys:
             KeyCompleteFlushStrategy().flush(store, name, df, keys)
             return
-        incoming = [tuple(r) for r in df.select(*keys).dropDuplicates().collect()]
+        key_refs = [bq(k) for k in keys]
+        incoming = [tuple(r) for r in df.select(*key_refs).dropDuplicates().collect()]
         if old is None:
             KeyCompleteFlushStrategy().flush(store, name, df, keys)
             self._record(name, incoming)
@@ -148,7 +151,7 @@ class BufferedKeyFlushStrategy(FlushStrategy):
         cached = [k for k in incoming if (name, k) in self._lru]
         if cached:
             spark = df.sparkSession
-            cached_df = spark.createDataFrame(cached, df.select(*keys).schema)
+            cached_df = spark.createDataFrame(cached, df.select(*key_refs).schema)
             upd_new = df.join(F.broadcast(cached_df), list(keys), "left_semi")
             ins_new = df.join(F.broadcast(cached_df), list(keys), "left_anti")
             # Single left join over the store: cached-key rows merge
@@ -163,12 +166,12 @@ class BufferedKeyFlushStrategy(FlushStrategy):
                 old.alias("o")
                 .join(F.broadcast(upd_new).alias("n"), list(keys), "left")
                 .select(
-                    *[F.col(k) for k in keys],
+                    *[qcol(k) for k in keys],
                     *[
                         (
-                            F.coalesce(F.col(f"n.{c}"), F.col(f"o.{c}"))
+                            F.coalesce(F.col(f"n.{bq(c)}"), F.col(f"o.{bq(c)}"))
                             if c in ncols
-                            else F.col(f"o.{c}")
+                            else F.col(f"o.{bq(c)}")
                         ).alias(c)
                         for c in ocols
                     ],
@@ -285,13 +288,13 @@ class StreamPipeline(PipelineBuilder):
             (cf, pf), *_ = spec.by.items()
             parents = []
             if spec.parent in result._internal:
-                parents.append(result._internal[spec.parent].select(F.col(pf).alias("__p")))
+                parents.append(result._internal[spec.parent].select(qcol(pf).alias("__p")))
             if spec.parent in self._eager_internal:
                 parents.append(
-                    self._eager_internal[spec.parent].select(F.col(pf).alias("__p"))
+                    self._eager_internal[spec.parent].select(qcol(pf).alias("__p"))
                 )
             if not parents:
-                missing = child.filter(F.col(cf).isNotNull()).limit(1).collect()
+                missing = child.filter(qcol(cf).isNotNull()).limit(1).collect()
                 if missing:
                     raise RelationshipIncompleteError(
                         f"chunk has {spec.child}.{cf} but no '{spec.parent}' rows "
@@ -302,8 +305,8 @@ class StreamPipeline(PipelineBuilder):
             for p in parents[1:]:
                 pool = pool.unionByName(p)
             orphan = (
-                child.filter(F.col(cf).isNotNull())
-                .join(F.broadcast(pool.dropDuplicates()), child[cf] == pool["__p"], "left_anti")
+                child.filter(qcol(cf).isNotNull())
+                .join(F.broadcast(pool.dropDuplicates()), child[bq(cf)] == pool["__p"], "left_anti")
                 .limit(3)
                 .collect()
             )

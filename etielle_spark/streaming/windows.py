@@ -104,16 +104,8 @@ def for_each_batch(
     """
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         tables = build(batch_df, batch_id)
-        # ETIELLE_SINK_OVERLAP=0 forces the sequential flush for the
-        # round-11 cold-JVM adjudication A/B (tools/ab_cold.py)
-        if (
-            getattr(sink, "ordered", True)
-            or len(tables) < 2
-            or os.environ.get("ETIELLE_SINK_OVERLAP", "1") == "0"
-        ):
+        if getattr(sink, "ordered", True) or len(tables) < 2:
             for name, df in tables.items():
                 sink.write(name, df)
             return

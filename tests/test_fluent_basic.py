@@ -368,3 +368,108 @@ def test_compile_emission_trailing_and_modes(spark):
         fields=[Field("k", get("k"))],
     )
     assert sorted(r["k"] for r in df.collect()) == [1, 2]
+
+
+# -- literal column names: dots and spaces are part of the name -------------
+
+
+def _cols(df, *cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_dotted_names_dict_root_merge_links_and_no_key(spark):
+    from etielle_spark import AddPolicy
+
+    data = {
+        "users": [
+            {"uid": "u1", "name": "Alice", "score": 1, "posts": [1]},
+            {"uid": "u2", "name": "Bob", "score": 2, "posts": [2]},
+            {"uid": "u1", "name": "Alicia", "score": 3, "posts": [3, 1]},
+        ],
+        "profiles": [{"uid": "u2", "email": "bob@x"}],
+        "posts": [
+            {"pid": 1, "author": "u1"},
+            {"pid": 2, "author": "u2"},
+            {"pid": 3, "author": "u9"},
+        ],
+    }
+    result = (
+        etl(data, spark=spark)
+        .goto("users")
+        .each()
+        .map_to(
+            "users",
+            fields=[
+                Field("k.1", get("uid")),
+                Field("x.y", get("name")),
+                Field("s.total", get("score"), merge=AddPolicy()),
+                Field("post.ids", get("posts")),
+            ],
+            join_on=["k.1"],
+        )
+        .goto_root(0)
+        .goto("profiles")
+        .each()
+        .map_to(
+            "users",
+            fields=[Field("k.1", get("uid")), Field("e.mail", get("email"))],
+            join_on=["k.1"],
+        )
+        .goto_root(0)
+        .goto("posts")
+        .each()
+        .map_to(
+            "posts",
+            fields=[Field("p.id", get("pid")), Field("user.id", get("author"))],
+            join_on=["p.id"],
+        )
+        .link_to("users", by={"user.id": "k.1"}, fk="user.fk", required=True)
+        .map_to("tags", fields=[Field("t.pid", get("pid"))])
+        .backlink("users", "posts", "my.posts", by={"post.ids": "p.id"})
+        .run()
+    )
+    users = result.tables["users"]
+    assert _cols(users, "id", "k.1", "x.y", "s.total", "post.ids", "e.mail") == [
+        ("u1", "u1", "Alicia", 4, [3, 1], None),
+        ("u2", "u2", "Bob", 2, [2], "bob@x"),
+    ]
+    assert sorted(
+        (r["k.1"], [p["p.id"] for p in r["my.posts"]]) for r in users.collect()
+    ) == [("u1", [3, 1]), ("u2", [2])]
+    assert _cols(result.tables["posts"], "p.id", "user.id", "user.fk") == [
+        (1, "u1", "u1"),
+        (2, "u2", "u2"),
+        (3, "u9", None),
+    ]
+    assert [r["key"] for r in result.errors["posts"].collect()] == ["u9"]
+    assert result.rows("tags", ordered=True) == [
+        {"t.pid": 1},
+        {"t.pid": 2},
+        {"t.pid": 3},
+    ]
+    assert result.row_set("posts", "p.id") == {(1,), (2,), (3,)}
+
+
+def test_dotted_and_spaced_names_dataframe_root(spark):
+    src = spark.createDataFrame(
+        [(1, "a", 0), (2, "b", 1), (1, "c", 2)], "`a.b` long, `my col` string, `o.rd` long"
+    )
+    result = (
+        etl(src, spark=spark, order_col="o.rd")
+        .map_to(
+            "keyed",
+            fields=[Field("a.b", get(["a.b"])), Field("my col", get(["my col"]))],
+            join_on=["a.b"],
+        )
+        .map_to("flat", fields=[Field("my col", get(["my col"]))])
+        .run()
+    )
+    assert _cols(result.tables["keyed"], "id", "a.b", "my col") == [
+        (1, 1, "c"),
+        (2, 2, "b"),
+    ]
+    assert result.rows("flat", ordered=True) == [
+        {"my col": "a"},
+        {"my col": "b"},
+        {"my col": "c"},
+    ]

@@ -91,6 +91,42 @@ def test_simhash_properties(spark, docs):
     assert hs[0]["simhash"] == hs[1]["simhash"]
 
 
+def _py_simhash(text, bits):
+    """Independent reference: per whitespace token, the first bits/4 hex
+    chars of md5 as a bit string; each position sums +1/-1 over the
+    tokens, and a positive sum is a '1'."""
+    import hashlib
+
+    sums = [0] * bits
+    for tok in text.strip().lower().split():
+        h = hashlib.md5(tok.encode()).hexdigest()[: bits // 4]
+        for b, ch in enumerate(format(int(h, 16), f"0{bits}b")):
+            sums[b] += 1 if ch == "1" else -1
+    return "".join("1" if s > 0 else "0" for s in sums)
+
+
+def test_simhash_matches_python_md5_sign_sum(spark, docs):
+    texts = [
+        (1, "the quick brown fox"),
+        (2, "The Quick  brown fox jumps"),
+        (3, "spam spam spam eggs"),
+        (4, "one"),
+        (5, "a b"),
+    ]
+    # real documents too, where both tokenizers agree: ASCII text whose
+    # only whitespace is the plain space (Spark's trim strips only that)
+    texts += [
+        (10 + r["doc_id"], r["text"])
+        for r in docs.limit(20).collect()
+        if r["text"]
+        and r["text"].isascii()
+        and not any(c.isspace() and c != " " for c in r["text"])
+    ]
+    df = spark.createDataFrame(texts, "doc_id long, text string")
+    got = {r["doc_id"]: r["simhash"] for r in simhash(df, "doc_id", "text", bits=32).collect()}
+    assert got == {i: _py_simhash(t, 32) for i, t in texts}
+
+
 def test_brute_force_topk_matches_python(spark, emb):
     queries = emb.limit(3)
     out = brute_force_topk(emb, queries, "vec_id", "embedding", k=5)

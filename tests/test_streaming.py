@@ -201,6 +201,33 @@ def test_upsert_strategies(spark):
     }
 
 
+def test_flush_strategies_with_dotted_names(spark):
+    from etielle_spark.streaming import BufferedKeyFlushStrategy
+
+    recs = [
+        {"users": [{"id": "u1", "v": 1}]},
+        {"users": [{"id": "u1", "v": 2}, {"id": "u2", "v": 5}]},
+    ]
+
+    def run(strategy):
+        res = (
+            stream(OneRecordPerChunkSource(recs), spark=spark, flush_strategy=strategy)
+            .goto("users")
+            .each()
+            .map_to(
+                "users",
+                fields=[Field("k.1", get("id")), Field("v.x", get("v"))],
+                join_on=["k.1"],
+            )
+            .run()
+        )
+        return sorted((r["k.1"], r["v.x"]) for r in res["users"].collect())
+
+    assert run(UpsertFlushStrategy("update")) == [("u1", 2), ("u2", 5)]
+    assert run(UpsertFlushStrategy("skip")) == [("u1", 1), ("u2", 5)]
+    assert run(BufferedKeyFlushStrategy()) == [("u1", 2), ("u2", 5)]
+
+
 def test_structured_streaming_windows(spark):
     """Drive a real readStream (availableNow over the events parquet) and
     check the windowed aggregation equals the batch computation."""
