@@ -8,12 +8,14 @@ workload).  ``Column`` objects are immutable expression trees independent
 of any DataFrame or session, so an expression built once can be reused by
 every later compile in the same JVM.
 
-``cexpr(text)`` returns ``F.expr(text)`` memoized per (JVM gateway, text).
-The cache is keyed on the py4j gateway identity: a stopped/restarted
-SparkSession keeps the same JVM (hits stay valid), while a torn-down
-gateway (bench.py kills the JVM before its scale-curve subprocess) changes
-the key and the stale entries are never touched.  Bounded FIFO so a
-pathological text-generating caller cannot grow it without limit.
+``cexpr(text)`` returns ``F.expr(text)`` memoized per text for the life
+of one JVM gateway.  The cache holds the gateway object it was filled
+under: a stopped/restarted SparkSession keeps the same JVM (hits stay
+valid), while a new gateway (bench.py kills the JVM before its
+scale-curve subprocess) empties the cache before the next lookup.  The
+object itself is held, not its ``id()``, which a later gateway could
+reuse.  Bounded FIFO so a pathological text-generating caller cannot
+grow it without limit.
 
 This memoizes PLAN CONSTRUCTION only — no data, no results, no analysis
 state; the same class of cache as benchqueries._TABLE_CACHE.
@@ -23,26 +25,25 @@ from __future__ import annotations
 
 from collections import OrderedDict
 
+from pyspark import SparkContext
 from pyspark.sql import Column, functions as F
 
 _MAX = 8192
-_CACHE: "OrderedDict[tuple[int, str], Column]" = OrderedDict()
-
-
-def _gateway_key() -> int:
-    from pyspark import SparkContext
-
-    gw = SparkContext._gateway
-    return id(gw) if gw is not None else 0
+_CACHE: "OrderedDict[str, Column]" = OrderedDict()
+# the py4j gateway the cached Columns belong to
+_gateway: object = None
 
 
 def cexpr(text: str) -> Column:
     """``F.expr(text)``, memoized for the life of the JVM gateway."""
-    key = (_gateway_key(), text)
-    col = _CACHE.get(key)
+    global _gateway
+    if SparkContext._gateway is not _gateway:
+        _CACHE.clear()
+        _gateway = SparkContext._gateway
+    col = _CACHE.get(text)
     if col is None:
         col = F.expr(text)
-        _CACHE[key] = col
+        _CACHE[text] = col
         if len(_CACHE) > _MAX:
             _CACHE.popitem(last=False)
     return col

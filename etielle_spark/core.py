@@ -191,9 +191,10 @@ class LevelEnv:
     # variant levels dispatch list-vs-dict PER ROW: key is NULL for array
     # rows, set for object rows — key()/index() become row-level CASEs
     variant: bool = False
-    # SQL-text twin of ``pos`` (e.g. "CAST(`__p1` AS BIGINT)") so the
-    # arrival-order struct can build as ONE memoized parsed expression
-    # instead of per-position py4j trips (fluent._ord_struct)
+    # SQL-text twin of ``pos`` (e.g. "CAST(`__p1` AS BIGINT)"), set
+    # whenever ``pos`` is: the arrival-order struct builds as ONE memoized
+    # parsed expression instead of per-position py4j trips
+    # (fluent._ord_struct)
     pos_sql: Optional[str] = None
 
 

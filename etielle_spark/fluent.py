@@ -580,6 +580,7 @@ def _explode_level(
                 dtype=value_type,
                 key=F.col(k),
                 pos=F.col(p).cast("long"),
+                pos_sql=f"CAST({bq(p)} AS BIGINT)",
             )
         )
         return df2, env
@@ -1589,30 +1590,20 @@ def _ord_struct(
     (SURVEY.md §7 hard part #1).  Structs compare lexicographically.
 
     The row-order column is always ``__roword`` (every caller's frame
-    comes through ``_root_env``).  When every pos-bearing level carries a
-    SQL-text twin the struct builds as ONE memoized parsed expression
+    comes through ``_root_env``).  Every pos-bearing level carries a
+    SQL-text twin, so the struct builds as ONE memoized parsed expression
     (zero py4j trips on re-compiles) instead of ~4 trips per field."""
-    pos = [(lv.pos, lv.pos_sql) for lv in levels if lv.pos is not None]
+    pos = [lv.pos_sql for lv in levels if lv.pos is not None]
     e = int(seq) if seq is not None else 0
-    if all(s is not None for _, s in pos):
-        fields = [
-            f"CAST({int(root_index)} AS BIGINT) AS r",
-            "CAST(`__roword` AS BIGINT) AS w",
-            f"CAST({e} AS BIGINT) AS e",
-        ]
-        for i in range(max_pos):
-            s = pos[i][1] if i < len(pos) else "0"
-            fields.append(f"CAST({s} AS BIGINT) AS p{i}")
-        return cexpr("struct(" + ", ".join(fields) + ")")
     fields = [
-        F.lit(root_index).cast("long").alias("r"),
-        F.col("__roword").cast("long").alias("w"),
-        F.lit(e).cast("long").alias("e"),
+        f"CAST({int(root_index)} AS BIGINT) AS r",
+        "CAST(`__roword` AS BIGINT) AS w",
+        f"CAST({e} AS BIGINT) AS e",
     ]
     for i in range(max_pos):
-        c = pos[i][0] if i < len(pos) else F.lit(0)
-        fields.append(c.cast("long").alias(f"p{i}"))
-    return F.struct(*fields)
+        s = pos[i] if i < len(pos) else "0"
+        fields.append(f"CAST({s} AS BIGINT) AS p{i}")
+    return cexpr("struct(" + ", ".join(fields) + ")")
 
 
 def _null_empty_key_filter(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -1630,18 +1621,6 @@ def _null_empty_key_filter(df: DataFrame, keys: list[str]) -> DataFrame:
             parts.append(f"({bq(k)} IS NOT NULL AND CAST({bq(k)} AS STRING) <> '')")
     return df.filter(" AND ".join(parts)) if parts else df
 
-
-# escape hatch for the single-emission merge fast path (tests flip it to
-# differentially check fast == general on the same pipelines)
-_FAST_SINGLE_EMISSION = True
-
-# escape hatch for the provably-distinct merge skip (same differential
-# test treatment)
-_DISTINCT_KEY_SKIP = True
-
-# escape hatch for the per-field (hash-aggregable) LWW form; False
-# restores the whole-row struct max_by (tests A/B the two)
-_PER_FIELD_LWW = True
 
 # staging/debug switch: verify every assume_distinct hint with a
 # one-pass duplicate count and raise on violation (costs one extra
@@ -1703,19 +1682,169 @@ def _keys_provably_distinct(df: DataFrame, join_on: list[str]) -> bool:
         return False
 
 
+def _merge_keyed(
+    table: str,
+    keyed: list[tuple[EmissionSpec, DataFrame]],
+    field_order: list[str],
+    temp_names: set[str],
+    policies: dict[str, MergePolicy],
+    maybe_aggregate_root: bool,
+) -> DataFrame:
+    """The keyed merge: ONE ``groupBy(join_on).agg(...)`` over every keyed
+    emission, each field folded by its policy (default last-write-wins)
+    over arrival order.  The form follows from facts of the emissions:
+
+    - A field whose value EVERY emission supplies orders by the shared
+      ``_ORD``.  Only the others get an ``__o_<name>`` mirror, NULL on
+      rows whose emission does not supply the value (aggregates ignore
+      those rows).  A lone emission supplies every field it declares, so
+      it groups its frame as it is; only mirrors or a union of emissions
+      need the aligning select.
+    - One emission without nesting positions has ``_ORD = struct(r, w,
+      e)`` with r (root) and e (emission) constant: ordering by the long
+      ``w`` alone is identical and struct-compare-free (collect_list sort
+      keys and max_by comparisons drop ~25% of the aggregate cost on the
+      600k-row policy-merge bench query).
+    - Default-LWW fields on the shared order aggregate PER FIELD when all
+      are atomic: a scalar ``max_by`` buffer is hash-mutable, so the merge
+      plans as a codegen'd HashAggregate, while ``max_by(struct(...))``
+      falls to SortAggregate (two sorts per partition at any scale).  Same
+      winner, as the arrival order is unique per row.  Otherwise they
+      share one ``max_by(struct(...))`` (per-field would still
+      SortAggregate, just with more buffers).
+    - Variant-typed keys (string/number-mixed fields) can't feed groupBy:
+      they group on their exact JSON form (7 vs "7" stay DISTINCT keys,
+      Python-dict semantics) and are rebuilt afterwards
+      (parse_json∘to_json is identity on scalars).
+    - Provably-distinct skip: one emission, no policies (AppendPolicy
+      wraps even a 1-row group in a list — not the identity), and either
+      an ``assume_distinct`` hint or Catalyst's proof of <=1 row per key
+      (the groupBy-built document root): the merge is the identity and
+      the frame passes through.  The analyzed-plan sniff keeps the
+      optimizer probe off the common non-aggregate emission path.
+    """
+    join_on = keyed[0][0].join_on
+    # a frame carries every declared column (join keys must be real for
+    # the groupBy) but supplies a field's VALUE only where the declaration
+    # is non-temp (or the field is internal-only, i.e. temp everywhere)
+    supplies = [
+        {f.name for f in em.fields if not f.is_temp or f.name in temp_names}
+        for em, _ in keyed
+    ]
+    val_fields = [n for n in field_order if n not in join_on]
+    mirrored = {n for n in val_fields if not all(n in s for s in supplies)}
+    frames = [_null_empty_key_filter(df, join_on) for _, df in keyed]
+    single = len(frames) == 1
+    if single and not mirrored:
+        src = frames[0]
+    else:
+        ord_type = frames[0].schema[_ORD].dataType.simpleString()
+        aligned = []
+        for (em, _), df, sup in zip(keyed, frames, supplies):
+            declared = {f.name for f in em.fields}
+            cols = [_ORD]
+            for n in field_order:
+                cols.append(bq(n) if n in declared else cexpr(f"NULL AS {bq(n)}"))
+                if n in mirrored:
+                    o = bq(_ORD) if n in sup else f"CAST(NULL AS {ord_type})"
+                    cols.append(cexpr(f"{o} AS {bq('__o_' + n)}"))
+            aligned.append(df.select(*cols))
+        src = aligned[0]
+        for m in aligned[1:]:
+            src = src.unionByName(m, allowMissingColumns=True)
+    schema = src.schema
+    variant_keys = {
+        k for k in join_on if isinstance(schema[k].dataType, T.VariantType)
+    }
+
+    if single and not policies and not mirrored and not variant_keys:
+        hinted = keyed[0][0].assume_distinct
+        if hinted and _VERIFY_DISTINCT_HINTS:
+            dup = (
+                src.groupBy(*[qcol(k) for k in join_on])
+                .count()
+                .filter(F.col("count") > 1)
+                .limit(1)
+                .collect()
+            )
+            if dup:
+                key_repr = {k: dup[0][k] for k in join_on}
+                raise ValueError(
+                    f"assume_distinct violated for table '{table}': key "
+                    f"{key_repr} occurs more than once in the emission"
+                )
+        if hinted or (
+            maybe_aggregate_root
+            and "Aggregate" in src._jdf.queryExecution().analyzed().toString()
+            and _keys_provably_distinct(src, join_on)
+        ):
+            return src.select(*[bq(n) for n in field_order], _ORD)
+
+    ord_fields = [f.name for f in schema[_ORD].dataType.fields]
+    slim = single and ord_fields == ["r", "w", "e"]
+    ord_col = F.col(_ORD).getField("w") if slim else F.col(_ORD)
+    ord_text = f"{bq(_ORD)}.w" if slim else bq(_ORD)
+    shared_lww = [n for n in val_fields if n not in policies and n not in mirrored]
+    per_field = all(isinstance(schema[n].dataType, T.AtomicType) for n in shared_lww)
+    # memoized SQL-text aggregates: one cached expression instead of ~5
+    # py4j trips per field, re-used by every later compile of the same
+    # pipeline shape (per-micro-batch foreachBatch compiles pay this
+    # every batch; round 11, guide §7.3)
+    aggs = []
+    if shared_lww and per_field:
+        aggs.extend(
+            cexpr(f"max_by({bq(n)}, {ord_text}) AS {bq(n)}") for n in shared_lww
+        )
+    elif shared_lww:
+        aggs.append(
+            F.max_by(
+                F.struct(*[qcol(n).alias(n) for n in shared_lww]), ord_col
+            ).alias("__row")
+        )
+    for n in val_fields:
+        if n in policies:
+            o = qcol(f"__o_{n}") if n in mirrored else ord_col
+            aggs.append(policies[n].agg(qcol(n), o, schema[n].dataType).alias(n))
+        elif n in mirrored:
+            aggs.append(cexpr(f"max_by({bq(n)}, {bq('__o_' + n)}) AS {bq(n)}"))
+    aggs.append(cexpr(f"min({bq(_ORD)}) AS {bq(_ORD)}"))
+    # groupBy/select take NAME STRINGS (same resolution as F.col, zero
+    # py4j trips per column)
+    grouped = src.groupBy(
+        *[
+            F.to_json(qcol(k)).alias(f"__kc_{k}") if k in variant_keys else bq(k)
+            for k in join_on
+        ]
+    ).agg(*aggs)
+    # variant-key restore, struct unpacking and declared column order in
+    # ONE select (each DataFrame op is a py4j round trip + a full plan
+    # re-analysis; the fluent compile is driver-latency-bound)
+    sel = []
+    for n in field_order:
+        if n in variant_keys:
+            sel.append(F.parse_json(qcol(f"__kc_{n}")).alias(n))
+        elif n in shared_lww and not per_field:
+            sel.append(F.col("__row").getField(n).alias(n))
+        else:
+            sel.append(bq(n))
+    return grouped.select(*sel, _ORD)
+
+
 def _assemble_table(
     table: str,
     pairs: list[tuple[EmissionSpec, DataFrame]],
     *,
     maybe_aggregate_root: bool = True,
-) -> tuple[DataFrame, list[str], Optional[DataFrame]]:
+) -> tuple[DataFrame, list[tuple[str, str]], Optional[DataFrame]]:
     """Merge all emissions targeting one table.
 
     Keyed emissions (join_on) merge via groupBy with per-field policies over
     arrival order; auto-key emissions append (union) — reference semantics
     at executor.py:181-196 / 272-353 and fluent.py:1339-1371.
 
-    Returns (internal_df_with_temp_and_seq, public_columns, errors_df).
+    Returns (internal_df_with_temp_and_seq, public_pairs, errors_df):
+    ``public_pairs`` maps each public column name to the internal column
+    that holds it (an injected ``id`` may sit beside a ``TempField('id')``).
     """
     keyed = [(em, df) for em, df in pairs if em.join_on]
     autos = [(em, df) for em, df in pairs if not em.join_on]
@@ -1750,192 +1879,12 @@ def _assemble_table(
                 )
 
     parts: list[DataFrame] = []
-    # FAST PATH — the dominant case: ONE keyed emission with statically
-    # single-typed (non-variant) keys.  Every row then supplies every
-    # declared field with the same arrival order (_ORD is non-null
-    # everywhere), so the per-field __o_ mirror columns and the marked
-    # union are pure overhead: policies aggregate over _ORD directly
-    # (halving the shuffle width) and all default-LWW fields collapse to
-    # ONE whole-row max_by instead of |fields| aggregate buffers.
-    fast_single = (
-        _FAST_SINGLE_EMISSION
-        and len(keyed) == 1
-        and not autos
-        and all(
-            not isinstance(keyed[0][1].schema[k].dataType, T.VariantType)
-            for k in join_on
-        )
-    )
-    skip_merge = False
-    if keyed and fast_single:
-        em, df = keyed[0]
-        df = _null_empty_key_filter(df, em.join_on)
-        val_fields = [n for n in field_order if n not in join_on]
-        lww_fields = [n for n in val_fields if n not in policies]
-        # PROVABLY-DISTINCT SKIP: one emission, no merge policies, and
-        # Catalyst proves <=1 row per key (the groupBy-built document
-        # root) -> the merge aggregation is the identity; emit the
-        # frame as-is.  The analyzed-plan sniff keeps the optimizer
-        # probe off the common non-aggregate emission path (policies
-        # are excluded because e.g. AppendPolicy wraps even a 1-row
-        # group in a list — not the identity).
-        hinted = em.assume_distinct and not policies
-        skip_merge = hinted or (
-            _DISTINCT_KEY_SKIP
-            and maybe_aggregate_root
-            and not policies
-            and "Aggregate" in df._jdf.queryExecution().analyzed().toString()
-            and _keys_provably_distinct(df, join_on)
-        )
-        if hinted and _VERIFY_DISTINCT_HINTS:
-            dup = (
-                df.groupBy(*[qcol(k) for k in join_on])
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .collect()
+    if keyed:
+        parts.append(
+            _merge_keyed(
+                table, keyed, field_order, temp_names, policies, maybe_aggregate_root
             )
-            if dup:
-                key_repr = {k: dup[0][k] for k in join_on}
-                raise ValueError(
-                    f"assume_distinct violated for table '{table}': key "
-                    f"{key_repr} occurs more than once in the emission"
-                )
-        if skip_merge:
-            parts.append(
-                df.select(
-                    *[bq(n) for n in field_order],
-                    _ORD,
-                )
-            )
-    if keyed and fast_single and not skip_merge:
-        # With one emission and no nesting positions, _ORD is
-        # struct(r, w, e) with r (root index) and e (emission seq)
-        # CONSTANT — ordering by the single long w is identical and
-        # struct-compare-free (collect_list sort keys and max_by
-        # comparisons drop ~25% of the aggregate cost, measured on the
-        # 600k-row policy-merge bench query).
-        ord_t = df.schema[_ORD].dataType
-        slim = isinstance(ord_t, T.StructType) and [
-            f.name for f in ord_t.fields
-        ] == ["r", "w", "e"]
-        ord_col = F.col(_ORD).getField("w") if slim else F.col(_ORD)
-        ord_text = f"{bq(_ORD)}.w" if slim else bq(_ORD)
-        # all-atomic LWW fields aggregate PER FIELD: a scalar
-        # max_by(col, ord) buffer is hash-mutable, so the whole merge
-        # plans as a codegen'd HashAggregate; the whole-row
-        # max_by(struct(...), ord) falls to SortAggregate (immutable
-        # struct buffer), which sorts every partition twice at any
-        # scale.  Identical semantics because the arrival order is
-        # unique per row — every per-field max_by picks the same
-        # winning row the struct pick would.  Non-atomic fields keep
-        # the one-struct form (per-field would still SortAggregate,
-        # just with more buffers).
-        atomic_lww = _PER_FIELD_LWW and all(
-            isinstance(df.schema[n].dataType, T.AtomicType) for n in lww_fields
         )
-        aggs = []
-        if lww_fields and atomic_lww:
-            # memoized SQL-text aggregates: one cached expression instead
-            # of ~5 py4j trips per field, re-used by every later compile
-            # of the same pipeline shape (per-micro-batch foreachBatch
-            # compiles pay this every batch; round 11, guide §7.3)
-            aggs.extend(
-                cexpr(f"max_by({bq(n)}, {ord_text}) AS {bq(n)}")
-                for n in lww_fields
-            )
-        elif lww_fields:
-            aggs.append(
-                F.max_by(
-                    F.struct(*[qcol(n).alias(n) for n in lww_fields]),
-                    ord_col,
-                ).alias("__row")
-            )
-        for name in val_fields:
-            if name in policies:
-                aggs.append(
-                    policies[name]
-                    .agg(qcol(name), ord_col, df.schema[name].dataType)
-                    .alias(name)
-                )
-        aggs.append(cexpr(f"min({bq(_ORD)}) AS {bq(_ORD)}"))
-        # groupBy/select take NAME STRINGS (same resolution as F.col,
-        # zero py4j trips per column)
-        grouped = df.groupBy(*[bq(k) for k in join_on]).agg(*aggs)
-        sel = [
-            F.col("__row").getField(n).alias(n)
-            if n in lww_fields and not atomic_lww
-            else bq(n)
-            for n in field_order
-        ]
-        parts.append(grouped.select(*sel, _ORD))
-    elif keyed and not skip_merge:
-        marked = []
-        for em, df in keyed:
-            df = _null_empty_key_filter(df, em.join_on)
-            # the frame carries every declared column (join keys must be real
-            # for the groupBy), but supplies a field's VALUE to the merge
-            # only where the declaration is non-temp (or the field is
-            # internal-only, i.e. temp everywhere)
-            declared = {f.name for f in em.fields}
-            supplies_value = {
-                f.name
-                for f in em.fields
-                if (not f.is_temp) or f.name in temp_names
-            }
-            cols = [F.col(_ORD)]
-            for name in field_order:
-                if name in declared:
-                    cols.append(qcol(name))
-                else:
-                    cols.append(F.lit(None).alias(name))
-                if name in supplies_value:
-                    cols.append(F.col(_ORD).alias(f"__o_{name}"))
-                else:
-                    cols.append(
-                        F.lit(None).cast(df.schema[_ORD].dataType).alias(f"__o_{name}")
-                    )
-            marked.append(df.select(*cols))
-        unioned = marked[0]
-        for m in marked[1:]:
-            unioned = unioned.unionByName(m, allowMissingColumns=True)
-
-        aggs: list[Column] = []
-        for name in field_order:
-            if name in join_on:
-                continue
-            pol = policies.get(name, LastWriteWinsPolicy())
-            dtype = unioned.schema[name].dataType
-            aggs.append(pol.agg(qcol(name), qcol(f"__o_{name}"), dtype).alias(name))
-        aggs.append(F.min(F.col(_ORD)).alias(_ORD))
-
-        # variant-typed keys (string/number-mixed fields) can't feed
-        # groupBy directly; group on their exact JSON form (7 vs "7"
-        # stay DISTINCT keys, Python-dict semantics) and rebuild the
-        # variant from it afterwards (parse_json∘to_json is identity on
-        # scalars)
-        key_exprs, key_restore = [], []
-        for k in join_on:
-            if isinstance(unioned.schema[k].dataType, T.VariantType):
-                key_exprs.append(F.to_json(qcol(k)).alias(f"__kc_{k}"))
-                key_restore.append(F.parse_json(qcol(f"__kc_{k}")).alias(k))
-            else:
-                key_exprs.append(qcol(k))
-                key_restore.append(qcol(k))
-        grouped = unioned.groupBy(*key_exprs).agg(*aggs)
-        # restore variant keys AND declared column order in ONE select
-        # (each DataFrame op is a py4j round trip + a full plan
-        # re-analysis; the fluent compile is driver-latency-bound)
-        restore_by_key = dict(zip(join_on, key_restore))
-        grouped = grouped.select(
-            *[
-                restore_by_key[n] if n in restore_by_key else qcol(n)
-                for n in field_order
-            ],
-            F.col(_ORD),
-        )
-        parts.append(grouped)
-
     for em, df in autos:
         supplied = {f.name for f in em.fields}
         cols = []
@@ -1983,8 +1932,12 @@ def _assemble_table(
     if schemas:
         schema = schemas[0]
 
-        def _err(stage: str, msg: Column) -> Column:
-            return F.struct(F.lit(stage).alias("stage"), msg.alias("msg"))
+        def _err(stage: str, field: str, msg: Column) -> Column:
+            return F.struct(
+                F.lit(stage).alias("stage"),
+                F.lit(field).alias("field"),
+                msg.alias("msg"),
+            )
 
         checks = []
         casts = {}
@@ -2004,6 +1957,7 @@ def _assemble_table(
                         bad,
                         _err(
                             "update",
+                            fld.name,
                             F.concat(
                                 F.lit(f"field {fld.name}: cannot cast '"),
                                 src.cast("string"),
@@ -2019,6 +1973,7 @@ def _assemble_table(
                             src.isNull(),
                             _err(
                                 "finalize",
+                                fld.name,
                                 F.lit(
                                     f"field {fld.name}: required field is null"
                                 ),
@@ -2030,6 +1985,7 @@ def _assemble_table(
                 checks.append(
                     _err(
                         "finalize",
+                        fld.name,
                         F.lit(f"field {fld.name}: required field is missing"),
                     ).alias(f"__errf_{fld.name}")
                 )
@@ -2055,9 +2011,7 @@ def _assemble_table(
                 )
                 .select(
                     "key",
-                    F.regexp_extract(F.col("e.msg"), r"^field (\w+):", 1).alias(
-                        "field"
-                    ),
+                    F.col("e.field").alias("field"),
                     F.col("e.msg").alias("message"),
                     F.col("e.stage").alias("stage"),
                 )

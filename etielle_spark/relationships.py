@@ -32,6 +32,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from .colcache import bq, qcol
 from .streaming.chunks import RelationshipIncompleteError
 
 __all__ = [
@@ -84,7 +85,7 @@ def compute_relationship_keys(
     aliased to the parent's names — the probe side of the bind join."""
     return child.select(
         *[
-            F.col(c).alias(p)
+            qcol(c).alias(p)
             for c, p in zip(spec.child_keys, spec.parent_keys)
         ]
     )
@@ -93,11 +94,11 @@ def compute_relationship_keys(
 def _parent_index(parent: DataFrame, spec: ManyToOneSpec, order_col: Optional[str]) -> DataFrame:
     fk = spec.parent_fk or spec.parent_keys[0]
     if order_col is not None:
-        agg = F.max_by(F.col(fk), F.col(order_col))
+        agg = F.max_by(qcol(fk), qcol(order_col))
     else:
-        agg = F.max_by(F.col(fk), F.col(fk))
+        agg = F.max_by(qcol(fk), qcol(fk))
     return (
-        parent.groupBy(*[F.col(k) for k in spec.parent_keys])
+        parent.groupBy(*[qcol(k) for k in spec.parent_keys])
         .agg(agg.alias(spec.attr))
     )
 
@@ -121,15 +122,15 @@ def bind_many_to_one(
     idx = _parent_index(parent, spec, order_col)
     cond = None
     for c, p in zip(spec.child_keys, spec.parent_keys):
-        eq = child[c] == idx[p]
+        eq = child[bq(c)] == idx[bq(p)]
         cond = eq if cond is None else cond & eq
     joined = child.join(idx, cond, "left").select(
-        *[child[c] for c in child.columns], idx[spec.attr]
+        *[child[bq(c)] for c in child.columns], idx[bq(spec.attr)]
     )
     if not spec.required:
         return joined, joined.filter(F.lit(False))
-    errors = joined.filter(F.col(spec.attr).isNull()).drop(spec.attr)
-    return joined.filter(F.col(spec.attr).isNotNull()), errors
+    errors = joined.filter(qcol(spec.attr).isNull()).drop(spec.attr)
+    return joined.filter(qcol(spec.attr).isNotNull()), errors
 
 
 def validate_relationship_completeness(
@@ -146,7 +147,7 @@ def validate_relationship_completeness(
         return
     probe = compute_relationship_keys(child, spec).dropDuplicates()
     missing = probe.join(
-        parent.select(*[F.col(k) for k in spec.parent_keys]).dropDuplicates(),
+        parent.select(*[qcol(k) for k in spec.parent_keys]).dropDuplicates(),
         list(spec.parent_keys),
         "left_anti",
     )

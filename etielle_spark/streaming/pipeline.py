@@ -10,10 +10,10 @@ Flush strategies (reference: etielle/chunking.py:281-677):
 - KeyCompleteFlushStrategy: plain append.
 - UpsertFlushStrategy("update"): key conflict -> replace whole row.
 - UpsertFlushStrategy("skip"):   key conflict -> keep existing row.
-- BufferedKeyFlushStrategy: the reference's bounded-LRU re-merge; with a
-  real table store the LRU bound is unnecessary (state lives in the store,
-  not the driver), so it behaves as "update".  At cluster scale the same
-  semantics come from Delta MERGE or dropDuplicatesWithinWatermark.
+- BufferedKeyFlushStrategy: the reference's bounded-LRU re-merge.  A key
+  still in the LRU (``max_keys`` most recently flushed) merges onto its
+  stored row, last non-None write wins per column; a key evicted from
+  the LRU re-inserts as a new row.  Only the key sets live on the driver.
 """
 
 from __future__ import annotations

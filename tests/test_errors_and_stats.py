@@ -40,6 +40,41 @@ def test_errors_collect_mode(spark):
     assert "not-a-number" in errs[0]["message"]
 
 
+def test_error_rows_carry_dotted_field_names(spark):
+    """An error row's ``field`` is the declared field name as given,
+    dots and all — for a cast failure and for a required-null field."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("k", T.StringType()),
+        T.StructField("v.x", T.LongType()),
+        T.StructField("w.y", T.StringType(), nullable=False),
+    ])
+    result = (
+        etl({"rows": [{"k": "a", "v": "abc", "w": "ok"},
+                      {"k": "b", "v": "7", "w": None}]}, spark=spark)
+        .goto("rows")
+        .each()
+        .map_to(
+            "t",
+            fields=[Field("k", get("k")), Field("v.x", get("v")),
+                    Field("w.y", get("w"))],
+            join_on=["k"],
+            schema=schema,
+        )
+        .run()
+    )
+    errs = sorted(
+        (r["key"], r["field"], r["stage"], r["message"])
+        for r in result.errors["t"].collect()
+    )
+    assert errs == [
+        ("a", "v.x", "update", "field v.x: cannot cast 'abc' to bigint"),
+        ("b", "w.y", "finalize", "field w.y: required field is null"),
+    ]
+    assert result.rows("t") == []
+
+
 def test_errors_fail_fast_mode(spark):
     with pytest.raises(ValueError, match="age"):
         (

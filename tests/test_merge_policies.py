@@ -98,3 +98,42 @@ def test_lww_default_overwrites_with_none(spark):
     rows = by_key(result)
     assert rows["a"]["v"] is None
     assert rows["b"]["v"] == "second"
+
+
+def test_single_emission_lww_plan_is_per_field_max_by(spark):
+    """A single-emission, all-atomic LWW table (the benchmark's ``posts``
+    shape) merges with one ``max_by`` per field over the shared arrival
+    order: no ``__o_<name>`` mirror column, no whole-row ``__row``
+    struct.  Without nesting positions the order is the long
+    ``__ord.w``; under an ``each()`` it is the ``__ord`` struct."""
+    import re
+
+    fields = [Field("id", get("id")), Field("user_id", get("user_id")),
+              Field("title", get("title"))]
+    flat = spark.createDataFrame(
+        [(10, 1, "t", 1), (10, 1, "u", 2), (11, 2, "v", 3)],
+        "id long, user_id long, title string, seq long",
+    )
+    res = (
+        etl(flat, spark=spark, order_col="seq")
+        .map_to("posts", fields=fields, join_on=["id"])
+        .run()
+    )
+    nested = (
+        etl({"posts": [{"id": 10, "user_id": 1, "title": "t"},
+                       {"id": 10, "user_id": 1, "title": "u"},
+                       {"id": 11, "user_id": 2, "title": "v"}]}, spark=spark)
+        .goto("posts").each()
+        .map_to("posts", fields=fields, join_on=["id"])
+        .run()
+    )
+    for result, order in ((res, r"__ord#\d+L?\.w"), (nested, r"__ord#\d+")):
+        qe = result["posts"]._jdf.queryExecution()
+        analyzed = qe.analyzed().toString()
+        for name in ("user_id", "title"):
+            assert re.search(rf"max_by\({name}#\d+L?, {order}\) AS {name}#", analyzed)
+        for plan in (analyzed, qe.optimizedPlan().toString()):
+            assert not re.search(r"\b(__o_\w+|__row)#", plan)
+        assert sorted((r["id"], r["title"]) for r in result.rows("posts")) == [
+            (10, "u"), (11, "v")
+        ]

@@ -538,3 +538,36 @@ def test_map_column_strips_markers(spark):
     )
     j = result.rows("t")[0]["j"]
     assert _json.loads(j) == {"a": 1}
+
+
+def test_bind_many_to_one_dotted_key_names(spark):
+    """Core-API binding with column names that contain a dot: each name
+    is one literal column, not nested-field access (``p.id`` is not
+    field ``id`` of a struct ``p``)."""
+    from etielle_spark import ManyToOneSpec, bind_many_to_one
+    from etielle_spark.relationships import (
+        RelationshipIncompleteError,
+        compute_relationship_keys,
+        validate_relationship_completeness,
+    )
+
+    child = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "`p.id` long, `v.w` string"
+    )
+    parent = spark.createDataFrame(
+        [(1, 100, 1), (1, 101, 2), (2, 200, 1)], "`id.x` long, `f.k` long, `o.rd` long"
+    )
+    spec = ManyToOneSpec("c", "p", "fk.v", ["p.id"], ["id.x"], parent_fk="f.k")
+    bound, errors = bind_many_to_one(child, parent, spec, order_col="o.rd")
+    assert bound.columns == ["p.id", "v.w", "fk.v"]
+    assert sorted(tuple(r) for r in bound.collect()) == [(1, "a", 101), (2, "b", 200)]
+    assert [tuple(r) for r in errors.collect()] == [(3, "c")]
+    assert sorted(r[0] for r in compute_relationship_keys(child, spec).collect()) == [1, 2, 3]
+    with pytest.raises(RelationshipIncompleteError, match=r"\(3,\)"):
+        validate_relationship_completeness(child, parent, spec)
+    # default fk = first parent key, no order column
+    spec2 = ManyToOneSpec("c", "p", "fk", ["p.id"], ["id.x"], required=False)
+    bound2, _ = bind_many_to_one(child, parent, spec2)
+    assert sorted(tuple(r) for r in bound2.collect()) == [
+        (1, "a", 1), (2, "b", 2), (3, "c", None)
+    ]

@@ -220,21 +220,23 @@ def test_distinct_key_skip_differential(spark):
     """When the emission root is a groupBy on exactly the join keys,
     Catalyst proves <=1 row per key and the keyed-merge aggregation is
     skipped (fluent._keys_provably_distinct).  The skip must be
-    invisible: identical rows with the flag on and off, and the
-    on-plan must actually drop the merge aggregate."""
-    from etielle_spark import Field, etl, get
-    from etielle_spark import fluent as fl
+    invisible: the same rows as a local frame of the same data (which
+    the proof can't see, so the real merge runs) and as the reference
+    fold, and the skipped plan must actually drop the merge aggregate."""
+    from merge_reference import reference_merge
 
-    src = spark.createDataFrame(
-        [(1, 10), (1, 20), (2, 5), (3, 7), (3, 1)], "k long, v long"
-    )
+    from etielle_spark import Field, etl, get
+
+    data = [(1, 10), (1, 20), (2, 5), (3, 7), (3, 1)]
+    src = spark.createDataFrame(data, "k long, v long")
     grouped = src.groupBy("k").agg(
         F.sum("v").alias("total"), F.collect_list("v").alias("vs")
     )
+    unproven = spark.createDataFrame(grouped.collect(), grouped.schema)
 
-    def run():
-        return (
-            etl(grouped, spark=spark)
+    def run(root):
+        res = (
+            etl(root, spark=spark)
             .map_to(
                 "t",
                 fields=[
@@ -246,25 +248,25 @@ def test_distinct_key_skip_differential(spark):
             )
             .run()
         )
+        rows = sorted(
+            (r["k"], r["total"], tuple(sorted(r["n"]))) for r in res.rows("t")
+        )
+        return res["t"]._jdf.queryExecution().executedPlan().toString(), rows
 
-    res_on = run()
-    frame_on = res_on["t"]
-    assert "max_by" not in frame_on._jdf.queryExecution().executedPlan().toString()
-    rows_on = sorted(
-        (r["k"], r["total"], tuple(r["n"])) for r in res_on.rows("t")
+    plan_on, rows_on = run(grouped)
+    assert "max_by" not in plan_on
+    plan_off, rows_off = run(unproven)
+    assert "max_by" in plan_off
+    vs: dict = {}
+    for k, v in data:
+        vs.setdefault(k, []).append(v)
+    want = reference_merge(
+        [((k,), {"k": k, "total": sum(x), "n": x}) for k, x in vs.items()], {}
     )
-    fl._DISTINCT_KEY_SKIP = False
-    try:
-        res_off = run()
-        assert "max_by" in (
-            res_off["t"]._jdf.queryExecution().executedPlan().toString()
-        )
-        rows_off = sorted(
-            (r["k"], r["total"], tuple(r["n"])) for r in res_off.rows("t")
-        )
-    finally:
-        fl._DISTINCT_KEY_SKIP = True
-    assert rows_on == rows_off
+    want = sorted(
+        (r["k"], r["total"], tuple(sorted(r["n"]))) for r in want.values()
+    )
+    assert rows_on == rows_off == want
     assert [r[0] for r in rows_on] == [1, 2, 3]
 
 
