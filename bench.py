@@ -109,48 +109,41 @@ def streaming_events_windows(spark) -> float:
         rows_per_batch = ev.count() // 4
 
         from etielle_spark.benchqueries import fix_event_ts
-        from etielle_spark.streaming.windows import derived_stream_partitions
+        from etielle_spark.streaming.windows import stream_session
 
-        # round 11: state/shuffle partitions derived from per-batch
-        # volume instead of the session's batch default (see
-        # derived_stream_partitions — each state partition costs one
-        # state-store commit per micro-batch regardless of rows; clamped
-        # to the session default so the low-core bench pass and cluster
-        # sessions keep full parallelism).
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        parts = derived_stream_partitions(spark, rows_per_batch)
+        # state/shuffle partitions derived from per-batch volume (each
+        # state partition costs one state-store commit per micro-batch
+        # regardless of rows), set on a child session: this session's
+        # conf is not touched (see stream_session).
+        sized = stream_session(spark, rows_per_batch)
 
         t0 = time.perf_counter()
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        try:
-            stream = fix_event_ts(
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 2)
-                .parquet(src)
-            ).withColumnRenamed("ts", "tss")
-            agg = (
-                stream.withWatermark("tss", "10 minutes")
-                .groupBy(F.window("tss", "1 minute"), "event_type")
-                .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
-                .select(
-                    F.col("window.start").alias("window_start"),
-                    "event_type",
-                    "n",
-                    "total",
-                )
+        stream = fix_event_ts(
+            sized.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 2)
+            .parquet(src)
+        ).withColumnRenamed("ts", "tss")
+        agg = (
+            stream.withWatermark("tss", "10 minutes")
+            .groupBy(F.window("tss", "1 minute"), "event_type")
+            .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
+            .select(
+                F.col("window.start").alias("window_start"),
+                "event_type",
+                "n",
+                "total",
             )
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", f"{work}/out")
-                .option("checkpointLocation", f"{work}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            n = spark.read.parquet(f"{work}/out").count()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        )
+        q = (
+            agg.writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", f"{work}/out")
+            .option("checkpointLocation", f"{work}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        n = spark.read.parquet(f"{work}/out").count()
         dt = time.perf_counter() - t0
         assert n > 0, "streaming produced no closed windows"
         return dt

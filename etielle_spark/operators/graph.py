@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import partitions_for_rows
+
 
 def pagerank(
     edges: DataFrame,
@@ -173,11 +175,13 @@ def connected_components_df(
 
     Plan shape per round: one join of the symmetrized edge frame with
     the (one-row-per-vertex) label frame on the destination key, one
-    min-aggregation on the vertex key, and one scalar convergence count
-    — the label frame rides every shuffle, edges are re-scanned from
-    their persisted form, nothing is collected.  This is the standard
+    min-aggregation on the vertex key, one pointer-jump self-join of
+    its (cached) result, and one scalar convergence count — the label
+    frame rides every shuffle, edges are re-scanned from their
+    persisted form, nothing is collected.  This is the standard
     scalable CC recipe (hash-to-min; cf. Rastogi et al. 2013 — public
-    algorithm, reimplemented here on DataFrames).
+    algorithm, reimplemented here on DataFrames).  The loop's shuffles
+    are sized on its own frames, never through the session conf.
 
     Each round CHECKPOINTS the label frame (reliable checkpoint when a
     checkpoint dir is configured, local otherwise): the round's plan
@@ -207,19 +211,10 @@ def connected_components_df(
     e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
     base = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
     spark = e.sparkSession
-    cur_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # scale-adaptive LOOP partition count (guide §2.2): each round
-    # shuffles one ~16-byte row per vertex/edge, so at the session
-    # default (= core count locally, cluster-sized on a cluster) a
-    # small graph pays tens of near-empty tasks per stage, times 3-5
-    # stages, times O(log diameter) rounds — measured ~1.2 s/round of
-    # pure scheduling at 375k labels on local[32].  Partitions derive
-    # from the measured symmetrized edge count (~50k rows/task),
-    # never EXCEED the session setting (big graphs keep full
-    # parallelism), and the session conf is restored after the loop.
-    # NOTE: spark.sql.shuffle.partitions is session-scoped —
-    # concurrent queries submitted from other threads during the loop
-    # would plan under the reduced value.
+    # scale-adaptive LOOP partition count from the symmetrized edge
+    # count: each round shuffles one ~16-byte row per vertex/edge, and
+    # at the session default a small graph pays tens of near-empty tasks
+    # per stage per round (~1.2 s/round at 375k labels on local[32]).
     #
     # One pointer jump per round: a double jump was bit-identical but
     # LOST 2 of 3 cold-JVM pairs through the real q239 path (the extra
@@ -227,8 +222,7 @@ def connected_components_df(
     # codegen and stages than the dropped rounds save at this scale;
     # OPTIMIZATION_r11.md).
     base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    n_sym = base.count()
-    loop_parts = min(cur_parts, max(4, -(-n_sym // 50_000)))
+    loop_parts = partitions_for_rows(spark, base.count())
 
     reliable = spark.sparkContext.getCheckpointDir() is not None
 
@@ -261,93 +255,88 @@ def connected_components_df(
             # reaps anything this misses
             pass
 
-    if loop_parts < cur_parts:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        # pre-partition the persisted edge frame on the per-round join
-        # key: the cached partitioning satisfies the join's distribution
-        # requirement every round, so only the (one-row-per-vertex)
-        # label side shuffles per iteration — the standard
-        # iterative-join layout.  Explicit partition count so the cached
-        # layout matches the loop's conf regardless of when the frame is
-        # first materialized.
-        sym = base.repartition(loop_parts, F.col("d")).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+    # pre-partition the persisted edge frame on the per-round join key:
+    # the cached partitioning satisfies the join every round, and the
+    # label side's shuffle takes its count from it — the standard
+    # iterative-join layout.
+    sym = base.repartition(loop_parts, F.col("d")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
-        labels = _truncate(
-            sym.select(F.col("s").alias("id")).distinct().withColumn("component", F.col("id"))
-        )
-        # the labels action materialized sym; the pre-repartition
-        # frame's cache is now redundant
-        base.unpersist()
+    labels = _truncate(
+        sym.select(F.col("s").alias("id"))
+        .repartition(loop_parts, "id")
+        .distinct()
+        .withColumn("component", F.col("id"))
+    )
+    # the labels action materialized sym; the pre-repartition frame's
+    # cache is now redundant
+    base.unpersist()
 
-        from pyspark.sql import Observation
+    from pyspark.sql import Observation
 
-        comp_t = labels.schema["component"].dataType
-        for _ in range(max_iter):
-            prop = sym.join(labels, sym["d"] == labels["id"]).select(
-                F.col("s").alias("id"),
-                F.col("component"),
-                F.lit(None).cast(comp_t).alias("__old"),
-            )
-            # each vertex's PRE-round label rides the union as __old (one
-            # non-null value per id, so max() recovers it through the
-            # min-label aggregation): the convergence check then computes
-            # inside the round's own checkpoint action via observe() —
-            # round 8 removed the separate new-vs-old join + count job that
-            # previously ran per round
-            cand = (
-                labels.select(
-                    "id", "component", F.col("component").alias("__old")
-                )
-                .unionByName(prop)
-                .groupBy("id")
-                .agg(
-                    F.min("component").alias("component"),
-                    F.max("__old").alias("__old"),
-                )
-            )
-            # pointer jump: labels are vertex ids, so l(l(v)) is one
-            # self-join of the candidate labels
-            parent = cand.select(
-                F.col("id").alias("__pid"), F.col("component").alias("__pc")
-            )
-            cand = cand.join(
-                parent, cand["component"] == parent["__pid"], "left"
-            ).select(
-                cand["id"],
-                F.least(
-                    cand["component"],
-                    F.coalesce(F.col("__pc"), cand["component"]),
-                ).alias("component"),
-                cand["__old"],
-            )
-            obs = Observation()
-            new_labels = _truncate(
-                cand.observe(
-                    obs,
-                    F.sum(
-                        (F.col("component") != F.col("__old")).cast("long")
-                    ).alias("changed"),
-                )
-                .select("id", "component")
-            )
-            changed = int(obs.get["changed"] or 0)
-            # round N is materialized and the convergence count rode its
-            # checkpoint action: round N-1's checkpoint files are garbage
-            # NOW — delete them so the dir holds O(1) rounds
-            superseded = _ckpt_path(labels)
-            labels = new_labels
-            _drop_ckpt(superseded)
-            if changed == 0:
-                sym.unpersist()
-                return labels
-        sym.unpersist()
-        raise RuntimeError(
-            f"connected_components_df: not converged after {max_iter} rounds — "
-            "raise max_iter (component diameter exceeds it)"
+    comp_t = labels.schema["component"].dataType
+    for _ in range(max_iter):
+        prop = sym.join(labels, sym["d"] == labels["id"]).select(
+            F.col("s").alias("id"),
+            F.col("component"),
+            F.lit(None).cast(comp_t).alias("__old"),
         )
-    finally:
-        if loop_parts < cur_parts:
-            spark.conf.set("spark.sql.shuffle.partitions", str(cur_parts))
+        # each vertex's PRE-round label rides the union as __old (one
+        # non-null value per id, so max() recovers it through the
+        # min-label aggregation): the convergence check then computes
+        # inside the round's own checkpoint action via observe().  cand
+        # is cached because the pointer jump reads it twice (uncached,
+        # each side recomputes the union's shuffle); its partitioning
+        # also sizes the jump's shuffle.
+        cand = (
+            labels.select("id", "component", F.col("component").alias("__old"))
+            .unionByName(prop)
+            .repartition(loop_parts, "id")
+            .groupBy("id")
+            .agg(
+                F.min("component").alias("component"),
+                F.max("__old").alias("__old"),
+            )
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        # pointer jump: labels are vertex ids, so l(l(v)) is one
+        # self-join of the candidate labels
+        parent = cand.select(
+            F.col("id").alias("__pid"), F.col("component").alias("__pc")
+        )
+        jumped = cand.join(
+            parent, cand["component"] == parent["__pid"], "left"
+        ).select(
+            cand["id"],
+            F.least(
+                cand["component"],
+                F.coalesce(F.col("__pc"), cand["component"]),
+            ).alias("component"),
+            cand["__old"],
+        )
+        obs = Observation()
+        new_labels = _truncate(
+            jumped.observe(
+                obs,
+                F.sum(
+                    (F.col("component") != F.col("__old")).cast("long")
+                ).alias("changed"),
+            ).select("id", "component")
+        )
+        cand.unpersist()
+        changed = int(obs.get["changed"] or 0)
+        # round N is materialized and the convergence count rode its
+        # checkpoint action: round N-1's checkpoint files are garbage
+        # NOW — delete them so the dir holds O(1) rounds
+        superseded = _ckpt_path(labels)
+        labels = new_labels
+        _drop_ckpt(superseded)
+        if changed == 0:
+            sym.unpersist()
+            return labels
+    sym.unpersist()
+    raise RuntimeError(
+        f"connected_components_df: not converged after {max_iter} rounds — "
+        "raise max_iter (component diameter exceeds it)"
+    )

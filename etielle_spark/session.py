@@ -44,17 +44,12 @@ def get_spark(app_name: str = "etielle_spark", *, cpus: int | None = None) -> Sp
         # The trade is losing the PySpark line number in JVM analysis
         # error messages; the engine raises its own contextual errors.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # input split size, env-overridable.  Measured A/B at sf0.1
-        # (two full headline benches, medians of 3): 32m LOST to the
-        # 128m default across the board (total 20.0 vs 18.7 s) — the
-        # tables are small enough that extra tiny tasks cost more than
-        # the added scan parallelism buys.  On a CPU-bound cluster scan
-        # (tokenize/minhash per row over few huge files) lower this via
-        # SPARK_GRAFT_MAX_PARTITION_BYTES instead of editing code.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),
-        )
+        # input split size: 32m LOST to 128m across the board at sf0.1
+        # (two full headline benches, total 20.0 vs 18.7 s) — extra tiny
+        # tasks cost more than the scan parallelism buys.  A CPU-bound
+        # cluster scan (tokenize/minhash over few huge files) overrides
+        # it through SPARK_GRAFT_EXTRA_CONF.
+        .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     # generic env-driven conf passthrough: semicolon-separated k=v pairs,
@@ -76,6 +71,15 @@ def get_spark(app_name: str = "etielle_spark", *, cpus: int | None = None) -> Sp
     spark = builder.getOrCreate()
     ship_package(spark)
     return spark
+
+
+def partitions_for_rows(spark: SparkSession, rows: int) -> int:
+    """Shuffle partition count for ``rows`` small rows: ~50k rows per
+    task, clamped to [4, the session's ``spark.sql.shuffle.partitions``]
+    so big inputs keep full parallelism.  Callers set it on their own
+    plan or on a child session, never on ``spark``."""
+    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return min(cur, max(4, -(-int(rows) // 50_000)))
 
 
 # applicationIds whose Python workers already have the package zip on

@@ -12,7 +12,9 @@ from __future__ import annotations
 
 from typing import Callable, Optional
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+
+from ..session import partitions_for_rows
 
 
 def tumbling_agg(
@@ -122,28 +124,27 @@ def for_each_batch(
     return fn
 
 
-def derived_stream_partitions(
-    spark, rows_per_batch: int, *, rows_per_task: int = 50_000
-) -> int:
-    """Shuffle/state partition count for a streaming query, derived from
-    the per-micro-batch input volume instead of the session's batch
-    default.
+def stream_session(spark: SparkSession, rows_per_batch: int) -> SparkSession:
+    """A child session (``spark.newSession()``: same SparkContext, own
+    SQL conf) carrying ``spark``'s modifiable runtime SQL conf, with the
+    shuffle/state partition count derived from the per-micro-batch input
+    volume (:func:`etielle_spark.session.partitions_for_rows`).  Start
+    the stateful query's ``readStream`` on it; ``spark``'s conf is never
+    written.
 
     Structured Streaming pins a stateful operator's partition count at
-    the query's FIRST micro-batch from ``spark.sql.shuffle.partitions``
-    (it can never change for the life of the checkpoint), and every
-    partition pays a state-store commit (delta file + fsync) per
-    micro-batch regardless of how many rows it holds — measured ~650 ms
-    of task time per partition per batch on a ~10-row state at
-    local[32].  Sizing partitions by measured per-batch rows (~50k
-    small rows per task, the same rule as the CC loop's adaptive
-    partitioning, guide §2.2) removes that fixed cost for small-state
-    streams; the value is clamped to [4, session default], so a
-    high-volume stream on a cluster-sized session derives >= the
-    default and keeps full parallelism.  Set the conf BEFORE
-    ``.start()`` and restore it after the query terminates; the chosen
-    value is baked into the checkpoint, so resuming an existing
-    checkpoint ignores it.
+    the query's FIRST micro-batch, and every partition pays a
+    state-store commit (delta file + fsync) per micro-batch however few
+    rows it holds — measured ~650 ms of task time per partition per
+    batch on a ~10-row state at local[32].  The count is baked into the
+    checkpoint, so resuming an existing checkpoint ignores it.
     """
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return min(cur, max(4, -(-int(rows_per_batch) // rows_per_task)))
+    child = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            child.conf.set(key, value)
+    child.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(partitions_for_rows(spark, rows_per_batch)),
+    )
+    return child

@@ -1,8 +1,13 @@
 """Round-3 operators: KMV set algebra, conversion attribution,
-degree-oriented triangle counting.  Each test cross-checks against a
-brute-force computation of the same quantity on a toy input."""
+degree-oriented triangle counting, connected components.  Each test
+cross-checks against a brute-force computation of the same quantity on
+a toy input; the CC tests also pin that the loop sizes its own shuffles
+without writing the session conf."""
 
+import contextlib
 import datetime
+import re
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -220,3 +225,115 @@ def test_cluster_dedup_transitive(spark):
     comp3, keep3 = rows[3]
     assert (comp3, keep3) in ((1, False), (3, True))
     assert keep3 == (comp3 == 3)
+
+
+def _union_find_labels(edges):
+    """Driver-side truth: (vertex, smallest id in its component)."""
+    parent = {}
+
+    def find(v):
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return sorted((v, find(v)) for v in parent)
+
+
+@pytest.fixture
+def wide_parts(spark):
+    """A session default above the CC loop's floor of 4, so the loop's
+    own partition count (4 for these graphs) differs from the session's
+    and a conf write would be observable."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    yield "16"
+    spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+@contextlib.contextmanager
+def _watch_session(spark, plan=False):
+    """From a second thread, sample the session's shuffle-partition conf
+    (and, with ``plan``, the Exchange partition count of a small groupBy
+    planned on the session) until the body exits."""
+    samples, planned, errors = [], [], []
+    stop = threading.Event()
+
+    def run():
+        try:
+            while not stop.wait(0.01):
+                samples.append(spark.conf.get("spark.sql.shuffle.partitions"))
+                if plan:
+                    q = spark.range(10).groupBy((F.col("id") % 3).alias("k")).count()
+                    text = q._jdf.queryExecution().executedPlan().toString()
+                    planned.extend(
+                        re.findall(r"hashpartitioning\([^()]*, (\d+)\)", text)
+                    )
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    try:
+        yield samples, planned
+    finally:
+        stop.set()
+        t.join(timeout=60)
+    assert not t.is_alive(), "conf sampler did not stop"
+    assert not errors, errors
+
+
+def test_cc_labels_match_union_find_and_conf_unchanged(spark, wide_parts):
+    from etielle_spark.operators.graph import connected_components_df
+
+    # a path graph (multi-round convergence), a disjoint triangle, and
+    # a chain whose smallest id sits mid-path
+    rows = (
+        [(i, i + 1) for i in range(30)]
+        + [(100, 101), (101, 102), (102, 100)]
+        + [(205, 203), (203, 201), (201, 204), (204, 202)]
+    )
+    edges = spark.createDataFrame(rows, "id_a long, id_b long")
+    with _watch_session(spark) as (samples, _):
+        labels = sorted(
+            (r["id"], r["component"])
+            for r in connected_components_df(edges, "id_a", "id_b").collect()
+        )
+    assert labels == _union_find_labels(rows)
+    assert {c for _, c in labels} == {0, 100, 201}
+    # the loop sizes its own shuffles: the session conf never changes
+    assert samples and set(samples) == {wide_parts}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == wide_parts
+
+
+def test_cc_nonconvergence_raises_and_conf_unchanged(spark, wide_parts):
+    from etielle_spark.operators.graph import connected_components_df
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(200)], "id_a long, id_b long"
+    )
+    with _watch_session(spark) as (samples, _):
+        with pytest.raises(RuntimeError, match="not converged"):
+            connected_components_df(edges, "id_a", "id_b", max_iter=1)
+    assert samples and set(samples) == {wide_parts}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == wide_parts
+
+
+def test_cc_concurrent_query_plans_at_session_default(spark, wide_parts):
+    """A query planned on another thread while the CC loop runs (its
+    own partition count is 4) sees the session's 16 partitions."""
+    from etielle_spark.operators.graph import connected_components_df
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(60)], "id_a long, id_b long"
+    )
+    with _watch_session(spark, plan=True) as (samples, planned):
+        got = connected_components_df(edges, "id_a", "id_b").collect()
+    assert {r["component"] for r in got} == {0}
+    assert samples and set(samples) == {wide_parts}
+    assert planned and set(planned) == {wide_parts}

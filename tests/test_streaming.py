@@ -853,3 +853,63 @@ def test_incremental_hll_foreachbatch_stream(spark, tmp_path):
         for r in hll_distinct(docs, ["lang"], "text").collect()
     }
     assert got == want and want
+
+
+def test_stream_session_sizes_state_partitions_and_keeps_parent_conf(spark, tmp_path):
+    """A windowed stream started on stream_session's child runs its
+    stateful operator at the derived partition count; the parent's conf
+    is identical before and after, and the child carries the parent's
+    runtime SQL conf."""
+    import datetime
+
+    from etielle_spark.session import partitions_for_rows
+    from etielle_spark.streaming.windows import stream_session
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.legacy.parquet.nanosAsLong")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    try:
+        t0 = datetime.datetime(2024, 1, 1)
+        src = str(tmp_path / "src")
+        rows = [
+            (t0 + datetime.timedelta(minutes=i), f"k{i % 3}", i) for i in range(40)
+        ]
+        spark.createDataFrame(rows, "ts timestamp, k string, v long").repartition(
+            4
+        ).write.parquet(src)
+        schema = spark.read.parquet(src).schema
+        before = dict(spark.conf.getAll)
+
+        child = stream_session(spark, rows_per_batch=10)
+        assert child.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+        want_parts = partitions_for_rows(spark, 10)
+        assert want_parts == 4
+        agg = (
+            child.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            .withWatermark("ts", "5 minutes")
+            .groupBy(F.window("ts", "1 minute"), "k")
+            .agg(F.count("*").alias("n"))
+        )
+        q = (
+            agg.writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", str(tmp_path / "out"))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+        state = q.lastProgress["stateOperators"]
+        assert state[0]["numShufflePartitions"] == want_parts
+        assert spark.read.parquet(str(tmp_path / "out")).count() > 0
+        assert dict(spark.conf.getAll) == before
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
