@@ -302,20 +302,51 @@ def _voidify(dt: T.DataType, p: tuple, nulls: frozenset) -> T.DataType:
     return T.NullType() if p in nulls else dt
 
 
+def read_json_payloads(
+    spark: SparkSession,
+    payloads: Sequence[str],
+    void_paths: frozenset = frozenset(),
+) -> DataFrame:
+    """``spark.read.json`` over in-memory JSON documents, one per payload,
+    parsed on the JVM by ``DataFrameReader.json(Dataset[String])``.  The
+    plan leaf is a one-partition JSON scan, and no scan of it starts a
+    Python worker.
+
+    The payloads cross py4j as ONE newline-joined string (a Python list
+    would cost one py4j round trip per element) and are split back into
+    rows in SQL.  That is exact because a payload never holds a raw
+    newline: ``json.dumps`` escapes every control character.  A payload
+    that does (pretty-printed JSON) raises instead of splitting.
+
+    ``void_paths`` (see ``_null_only_paths``) re-reads the same rows under
+    the inferred schema with those leaves rewritten to VOID."""
+    if any("\n" in p for p in payloads):
+        raise ValueError("JSON payloads must be single-line documents")
+    jvm = spark._jvm
+    strings = jvm.Encoders.STRING()
+    # zero payloads join to one empty line, which reads as struct<> and
+    # no rows, like an empty RDD
+    text = jvm.java.util.Collections.singletonList("\n".join(payloads))
+    # char(10), not a '\n' literal: literal escapes follow session conf
+    lines = spark._jsparkSession.createDataset(text, strings).withColumn(
+        "value", jvm.functions.expr("explode(split(value, char(10), -1))")
+    )
+    ds = getattr(lines, "as")(strings)
+    jdf = DataFrame(spark.read._jreader.json(ds), spark)
+    if void_paths:
+        fixed = _voidify(jdf.schema, (), void_paths)
+        if fixed != jdf.schema:
+            jdf = DataFrame(spark.read.schema(fixed)._jreader.json(ds), spark)
+    return jdf
+
+
 def _read_prepared_json(
     spark: SparkSession, payloads: list[str], prepared_objs: list
 ) -> DataFrame:
-    """spark.read.json with the null-only-leaf schema fix: infer, rewrite
-    string-from-nothing leaves to VOID, re-read under the explicit schema
-    (values are all NULL there, so the re-read is exact)."""
-    rdd = spark.sparkContext.parallelize(payloads, 1)
-    jdf = spark.read.json(rdd)
-    nulls = _null_only_paths(prepared_objs)
-    if nulls:
-        fixed = _voidify(jdf.schema, (), nulls)
-        if fixed != jdf.schema:
-            jdf = spark.read.schema(fixed).json(rdd)
-    return jdf
+    """read_json_payloads with the null-only-leaf schema fix: infer,
+    rewrite string-from-nothing leaves to VOID, re-read under the explicit
+    schema (values are all NULL there, so the re-read is exact)."""
+    return read_json_payloads(spark, payloads, _null_only_paths(prepared_objs))
 
 
 def _df_from_obj(spark: SparkSession, obj: Any) -> tuple[DataFrame, T.DataType]:
@@ -1432,7 +1463,8 @@ class PipelineBuilder:
         errors: dict[str, DataFrame] = {}
         table_keys: dict[str, list[str]] = {}
         # only DataFrame roots can carry an Aggregate into the emission
-        # frame (dict/list docs compile from a LocalRelation), so the
+        # frame (dict/list docs compile from a JSON LogicalRDD scan of
+        # one document per row, which holds no Aggregate), so the
         # distinct-key probe is statically off everywhere else — the
         # analyzed-plan sniff is a py4j toString per keyed table, which
         # a 50-emission doc pipeline should never pay

@@ -168,6 +168,7 @@ def supabase_two_phase_insert(
     """
     import json
 
+    from ..fluent import read_json_payloads
     from .supabase import SupabaseSink, insert_returning
 
     spark = parent_df.sparkSession
@@ -185,8 +186,8 @@ def supabase_two_phase_insert(
     # would make inference raise AFTER phase 1 already committed the
     # parent inserts (json reads an all-null column as string, which is
     # fine: only the natural-key and gen_col columns are consumed here)
-    written = spark.read.json(
-        spark.sparkContext.parallelize([json.dumps(r, default=str) for r in returned])
+    written = read_json_payloads(
+        spark, [json.dumps(r, default=str) for r in returned]
     )
     if gen_col not in written.columns:
         raise ValueError(

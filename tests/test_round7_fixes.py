@@ -442,37 +442,3 @@ def test_round7_null_and_edge_input_audit(spark, tmp_path):
         ).collect()
     }
     assert got == {"a": 10, "b": None}
-
-
-def test_multi_emission_merge_preserves_types(spark):
-    """An emission whose column is None in EVERY document must not drag
-    the merged column to string: spark.read.json infers all-null leaves
-    as string, which unionByName would promote long+string to string —
-    the round-7 fuzz shape-11 find.  Null-only leaves now read as VOID
-    and unify to the other emission's real type."""
-    from etielle_spark import Field, MinPolicy, etl, get
-
-    data = {
-        "xs": [{"k": "a", "v": 1}, {"k": "b", "v": 3}],
-        "ys": [{"k": "a", "v": None}, {"k": "b", "v": None}],
-    }
-    res = (
-        etl(data, spark=spark)
-        .goto("xs").each()
-        .map_to("m", fields=[Field("k", get("k")),
-                             Field("mn", get("v"), merge=MinPolicy()),
-                             Field("last", get("v"))], join_on=["k"])
-        .goto_root()
-        .goto("ys").each()
-        .map_to("m", fields=[Field("k", get("k")),
-                             Field("mn", get("v"), merge=MinPolicy()),
-                             Field("last", get("v"))], join_on=["k"])
-        .run()
-    )
-    df = res["m"]
-    types = dict(df.dtypes)
-    assert types["mn"] == "bigint" and types["last"] == "bigint", types
-    rows = {r["k"]: (r["mn"], r["last"]) for r in df.collect()}
-    # LWW: the ys None arrives later and overwrites (reference
-    # explicit-None semantics); Min ignores the Nones
-    assert rows == {"a": (1, None), "b": (3, None)}

@@ -313,43 +313,3 @@ def test_distinct_key_skip_keeps_null_key_filter(spark):
     )
     rows = sorted((r["k"], r["total"]) for r in res.rows("t"))
     assert rows == [(1, 10), (2, 5)]
-
-
-def test_nested_variant_wrapper_in_void_struct_materializes(spark):
-    """A kind-mixed SUBTREE (serialize-time variant wrapper) nested in a
-    struct that also carries a void (all-None) field used to crash with
-    INVALID_VARIANT_CAST: strip_marker_fields parsed the wrapper to a
-    VARIANT value while _stripped_type still declared the wrapper
-    struct, and _project_to's devoid cast materialized the mismatch.
-    Found by fuzz shape 3 seed 77; pinned minimal here."""
-    from etielle_spark import Field, etl, get, key
-
-    blob = {
-        "root": {
-            "k0": [],  # array sibling: forces variant unification of entries
-            "k1": {
-                "b": {"c": -1, "a": None},  # void field -> devoid cast path
-                "c": [7, "s"],  # kind-mixed list -> nested wrapper
-            },
-        }
-    }
-    res = (
-        etl(blob, spark=spark)
-        .goto("root")
-        .each()
-        .map_to(
-            "t",
-            fields=[
-                Field("k", key()),
-                Field("a", get("a")),
-                Field("cb", get("b.c")),
-                Field("c1", get("c.1")),
-            ],
-        )
-        .run()
-    )
-    rows = {r["k"]: r for r in res.rows("t")}
-    assert set(rows) == {"k0", "k1"}
-    assert rows["k0"]["a"] is None and rows["k0"]["cb"] is None
-    assert rows["k1"]["cb"] == -1
-    assert rows["k1"]["c1"] == "s"  # navigates INTO the nested wrapper
