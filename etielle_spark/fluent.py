@@ -24,7 +24,8 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field as dc_field
 from difflib import get_close_matches
-from typing import Any, Optional, Sequence, Union
+from functools import partial
+from typing import Any, Callable, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -349,21 +350,35 @@ def _read_prepared_json(
     return read_json_payloads(spark, payloads, _null_only_paths(prepared_objs))
 
 
-def _df_from_obj(spark: SparkSession, obj: Any) -> tuple[DataFrame, T.DataType]:
-    """One in-memory JSON root -> a single-row DataFrame with column __n0.
+class _Docs(tuple):
+    """Several in-memory JSON documents given as ONE pipeline root, one
+    row each in this order (a sequential stream chunk, the eager roots).
+    A plain list root stays a single document."""
 
-    The root is wrapped so top-level lists/scalars stay a single node
-    (spark.read.json would otherwise explode a top-level array into rows).
-    """
-    prepared = _prepare_obj(obj, _variant_paths([obj]))
-    payload = json.dumps({"__root__": prepared})
-    jdf = _read_prepared_json(spark, [payload], [{"__root__": prepared}])
+
+def _read_docs(spark: SparkSession, docs: Sequence[Any]) -> tuple[DataFrame, T.DataType]:
+    """In-memory JSON documents -> one row each: ``__n0`` (the document)
+    and ``__roword`` (its ordinal, the cross-document arrival order).
+
+    Each document is wrapped as ``__root__`` so a top-level list or scalar
+    stays a single node (spark.read.json would otherwise explode a
+    top-level array into rows).  A lone document's ordinal is the literal
+    0, not a payload field, so its plan carries no ordinal column through
+    the traversal's generators."""
+    vp = _variant_paths(docs)
+    wrapped = [{"__root__": _prepare_obj(d, vp)} for d in docs]
+    if len(wrapped) > 1:
+        payloads = [json.dumps({"__roword": i, **w}) for i, w in enumerate(wrapped)]
+        ord_text = "CAST(__roword AS BIGINT) AS __roword"
+    else:
+        payloads = [json.dumps(w) for w in wrapped]
+        ord_text = "CAST(0 AS BIGINT) AS __roword"
+    jdf = _read_prepared_json(spark, payloads, wrapped)
     if "__root__" not in jdf.columns:
-        # e.g. root == {} or None: no inferable schema
-        df = spark.range(1).select(F.lit(None).alias("__n0"))
-        return df, T.NullType()
+        # no documents: no inferable schema
+        return jdf.select(cexpr("NULL AS __n0"), cexpr(ord_text)), T.NullType()
     dtype = jdf.schema["__root__"].dataType
-    return jdf.select(F.col("__root__").alias("__n0")), dtype
+    return jdf.select(cexpr("__root__ AS __n0"), cexpr(ord_text)), dtype
 
 
 def _root_env(
@@ -372,8 +387,9 @@ def _root_env(
     indices: dict[str, dict],
     order_col: Optional[str],
     cache: Optional[dict] = None,
-) -> tuple[DataFrame, CompileEnv, Column]:
-    """Returns (df, env, row_order_column).
+) -> tuple[DataFrame, CompileEnv]:
+    """The root frame (``__n0`` node, ``__roword`` row order) and its
+    compile environment.
 
     ``cache`` (keyed by id(root)) reuses the wrapped frame across the
     emissions of one run — for in-memory JSON roots this avoids one
@@ -398,15 +414,12 @@ def _root_env(
             cexpr(ord_text),
         )
         dtype = T.StructType([f for f in root.schema.fields if f.name != order_col])
-        if cache is not None:
-            cache[key] = (df, dtype)
     else:
-        df, dtype = _df_from_obj(spark, root)
-        df = df.withColumn("__roword", F.lit(0).cast("long"))
-        if cache is not None:
-            cache[key] = (df, dtype)
+        df, dtype = _read_docs(spark, root if isinstance(root, _Docs) else [root])
+    if cache is not None:
+        cache[key] = (df, dtype)
     env = CompileEnv(levels=[LevelEnv(node=F.col("__n0"), dtype=dtype)], indices=indices)
-    return df, env, F.col("__roword")
+    return df, env
 
 
 # ---------------------------------------------------------------------------
@@ -820,6 +833,8 @@ class PipelineResult:
         # caches (backlink parents) owned by this result on the sink-less
         # path; release() frees them deterministically
         self._persisted: list[DataFrame] = []
+        # each applied link's unbuilt orphan probe (see _apply_links)
+        self._orphans: dict[int, Callable[[], DataFrame]] = {}
 
     def release(self) -> None:
         """Unpersist every cache this result owns (backlink parents on a
@@ -1359,7 +1374,7 @@ class PipelineBuilder:
             if spec.from_dict is not None:
                 indices[spec.name] = spec.from_dict
                 continue
-            df, env, row_ord = _root_env(
+            df, env = _root_env(
                 spark, self._roots[spec.root_index], indices, self._order_col, cache
             )
             for i, (pth, mode) in enumerate(spec.iter_points, start=1):
@@ -1411,7 +1426,7 @@ class PipelineBuilder:
         max_pos: int,
         cache: Optional[dict] = None,
     ) -> DataFrame:
-        df, env, row_ord = _root_env(
+        df, env = _root_env(
             spark, self._roots[em.root_index], indices, self._order_col, cache
         )
         lvl = 0
@@ -1515,7 +1530,7 @@ class PipelineBuilder:
             if l.child in public
             and (l.parent in public or (extra_parents and l.parent in extra_parents))
         ]
-        internal, public, errors = _apply_links(
+        internal, public, errors, orphans = _apply_links(
             links, internal, public, public_map, errors, extra_parents
         )
         seq_unique = not any(
@@ -1550,6 +1565,7 @@ class PipelineBuilder:
             self._model_classes,
             key_cols=key_cols,
         )
+        result._orphans = orphans
         if self._sink is None:
             # lazy engine: without a sink nothing materializes, so counts
             # are unknown at this point (reference fluent.py:1496-1528
@@ -2146,8 +2162,10 @@ def _apply_links(
     extra_parents: Optional[dict[str, DataFrame]] = None,
 ):
     """link_to -> left equi join for FK population; required -> anti-join
-    errors (etielle/relationships.py:14-152,461-538)."""
+    errors (etielle/relationships.py:14-152,461-538).  Also returns each
+    applied link's unbuilt ``_orphans`` probe, keyed by ``id(spec)``."""
     extra_parents = extra_parents or {}
+    orphans: dict[int, Callable[[], DataFrame]] = {}
     for spec in links:
         if spec.child not in internal or (
             spec.parent not in internal and spec.parent not in extra_parents
@@ -2180,21 +2198,13 @@ def _apply_links(
         # 7.0, never '7')
         cf_t = child_int.schema[cf].dataType
         pf_t = parent_int.schema[pf].dataType
-        variant_key = isinstance(cf_t, T.VariantType) or isinstance(
-            pf_t, T.VariantType
-        )
-
-        def child_key():
-            return (
-                _key_canon(qcol(cf), cf_t) if variant_key else qcol(cf)
-            )
-
-        def parent_key():
-            return (
-                _key_canon(qcol(pf), pf_t) if variant_key else qcol(pf)
-            )
+        orphans[id(spec)] = partial(_orphans, child_int, cf, cf_t, parent_int, pf, pf_t)
 
         if spec.fk:
+            if isinstance(cf_t, T.VariantType) or isinstance(pf_t, T.VariantType):
+                ck, pk = _key_canon(qcol(cf), cf_t), _key_canon(qcol(pf), pf_t)
+            else:
+                ck, pk = qcol(cf), qcol(pf)
             id_internal = dict(ppairs).get("id")
             fk_src = qcol(id_internal) if id_internal else qcol(pf)
             # when multiple parents share a by-value the LAST one in
@@ -2203,7 +2213,7 @@ def _apply_links(
             # relationships.py:461-538) — not an arbitrary dropDuplicates
             parent_side = (
                 parent_int.select(
-                    parent_key().alias("__lk_pf"),
+                    pk.alias("__lk_pf"),
                     fk_src.alias(spec.fk),
                     F.col(_SEQ).alias("__lk_seq"),
                 )
@@ -2212,7 +2222,7 @@ def _apply_links(
             )
             joined = child_int.join(
                 F.broadcast(parent_side),
-                child_key() == parent_side["__lk_pf"],
+                ck == parent_side["__lk_pf"],
                 "left",
             ).drop("__lk_pf")
             internal[spec.child] = joined
@@ -2222,29 +2232,39 @@ def _apply_links(
             public[spec.child] = _select_public(joined, pairs)
 
         if spec.required:
-            parent_keys = parent_int.select(parent_key().alias("__lk_pf")).dropDuplicates()
-            missing = (
-                child_int.filter(qcol(cf).isNotNull())
-                .join(
-                    F.broadcast(parent_keys),
-                    child_key() == parent_keys["__lk_pf"],
-                    "left_anti",
-                )
-                .select(
-                    qcol(cf).cast("string").alias("key"),
-                    F.lit(cf).alias("field"),
-                    F.concat(
-                        F.lit(f"missing parent in '{spec.parent}' for {spec.child}.{cf}="),
-                        qcol(cf).cast("string"),
-                    ).alias("message"),
-                    F.lit("link").alias("stage"),
-                )
+            missing = orphans[id(spec)]().select(
+                qcol(cf).cast("string").alias("key"),
+                F.lit(cf).alias("field"),
+                F.concat(
+                    F.lit(f"missing parent in '{spec.parent}' for {spec.child}.{cf}="),
+                    qcol(cf).cast("string"),
+                ).alias("message"),
+                F.lit("link").alias("stage"),
             )
             if spec.child in errors:
                 errors[spec.child] = errors[spec.child].unionByName(missing)
             else:
                 errors[spec.child] = missing
-    return internal, public, errors
+    return internal, public, errors, orphans
+
+
+def _orphans(
+    child: DataFrame, cf: str, cf_t: T.DataType, parent: DataFrame, pf: str, pf_t: T.DataType
+) -> DataFrame:
+    """The child rows whose non-null key ``cf`` has no parent row with
+    that ``pf`` value: a left_anti against the parent's distinct keys.  A
+    string/number-mixed (variant) key on either side joins on the
+    ``_key_canon`` form; plain keys build from memoized SQL text."""
+    if isinstance(cf_t, T.VariantType) or isinstance(pf_t, T.VariantType):
+        pk = _key_canon(qcol(pf), pf_t).alias("__lk_pf")
+        on = _key_canon(qcol(cf), cf_t) == F.col("__lk_pf")
+    else:
+        pk = cexpr(f"{bq(pf)} AS __lk_pf")
+        on = cexpr(f"{bq(cf)} = __lk_pf")
+    parent_keys = parent.select(pk).dropDuplicates()
+    return child.filter(f"{bq(cf)} IS NOT NULL").join(
+        F.broadcast(parent_keys), on, "left_anti"
+    )
 
 
 def _apply_backlinks(
@@ -2437,7 +2457,7 @@ def compile_emission(
                 from .session import get_spark
 
                 spark = get_spark()
-    df, env, row_ord = _root_env(spark, root, indices or {}, order_col)
+    df, env = _root_env(spark, root, indices or {}, order_col)
     points: list[tuple[list, str]] = []
     for item in each or []:
         if isinstance(item, tuple):

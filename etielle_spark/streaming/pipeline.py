@@ -1,10 +1,13 @@
 """Chunked streaming execution with flush strategies.
 
 Reference lifecycle (etielle/fluent.py:1987-2026): per chunk — map, validate
-relationship-completeness, bind, flush via strategy, evict.  Here a chunk's
-roots become rows of one DataFrame (so the chunk's keyed merges are one
-groupBy with a correct cross-root arrival order), the compiled plan is
-reused, and "evict" is just micro-batch scope.
+relationship-completeness, bind, flush via strategy, evict.  Here each chunk
+is one batch run (``PipelineBuilder.run``): a sequential chunk's roots are
+read as one root of several documents, one row each (so the chunk's keyed
+merges are one groupBy with a correct cross-root arrival order), and
+completeness is checked with the batch run's own orphan probes.  Every
+chunk recompiles its plan; only the memoized expressions (``cexpr``) are
+reused.  "Evict" is just micro-batch scope.
 
 Flush strategies (reference: etielle/chunking.py:281-677):
 - KeyCompleteFlushStrategy: plain append.
@@ -18,19 +21,13 @@ Flush strategies (reference: etielle/chunking.py:281-677):
 
 from __future__ import annotations
 
-import json
+from functools import reduce
 from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..colcache import bq, qcol
-from ..fluent import (
-    PipelineBuilder,
-    PipelineResult,
-    _prepare_obj,
-    _read_prepared_json,
-    _variant_paths,
-)
+from ..colcache import bq, cexpr, qcol
+from ..fluent import PipelineBuilder, PipelineResult, _Docs
 from .chunks import Chunk, ChunkSource, RelationshipIncompleteError
 
 
@@ -227,8 +224,8 @@ class StreamPipeline(PipelineBuilder):
 
     # -- helpers ------------------------------------------------------------
 
-    def _clone_with_roots(self, roots: list, order_col: Optional[str]) -> PipelineBuilder:
-        b = PipelineBuilder(*roots, spark=self._spark, errors=self._errors_mode, order_col=order_col)
+    def _clone_with_roots(self, roots: list) -> PipelineBuilder:
+        b = PipelineBuilder(*roots, spark=self._spark, errors=self._errors_mode)
         b._emissions = self._emissions
         b._links = self._links
         b._backlinks = self._backlinks
@@ -237,90 +234,85 @@ class StreamPipeline(PipelineBuilder):
         b._model_classes = self._model_classes
         return b
 
-    def _combined_root_df(self, spark: SparkSession, roots: tuple) -> DataFrame:
-        """Sequential chunk: roots become rows of one DataFrame with an
-        arrival-order column, so cross-root keyed merges see reference
-        ordering (fluent.py:1406-1433)."""
-        objs = [_as_obj(r) for r in roots]
-        for o in objs:
-            if "__roword" in o:
-                raise ValueError(
-                    "sequential chunk roots must not contain a '__roword' key "
-                    "(reserved for the synthetic arrival order)"
-                )
-        # _prepare_obj injects the __keys__/__empty__ presence markers, so
-        # dict iteration over schema-unioned chunk rows stays per-row exact
-        vp = _variant_paths(objs)
-        prepared = [_prepare_obj(o, vp) for o in objs]
-        payloads = [
-            json.dumps({"__roword": i, **p}) for i, p in enumerate(prepared)
-        ]
-        # null-only-leaf schema fix (fluent._read_prepared_json): leaves
-        # None everywhere in THIS chunk read as VOID, not string, so the
-        # emission unions keep the other emissions' real types
-        return _read_prepared_json(spark, payloads, prepared)
-
-    def _run_chunk(self, spark: SparkSession, chunk: Chunk) -> PipelineResult:
+    def _run_chunk(self, chunk: Chunk) -> PipelineResult:
         if chunk.sequential:
             if any(em.root_index != 0 for em in self._emissions):
                 raise ValueError(
                     "sequential chunks require a single-root pipeline "
                     "(reference fluent.py:1797-1829)"
                 )
-            root_df = self._combined_root_df(spark, chunk.roots)
-            b = self._clone_with_roots([root_df], order_col="__roword")
+            # one root of several documents, one row each in arrival order
+            b = self._clone_with_roots([_Docs(chunk.roots)])
         else:
-            b = self._clone_with_roots(list(chunk.roots), order_col=None)
+            b = self._clone_with_roots(list(chunk.roots))
         return b.run(extra_parents=self._eager_internal or None)
 
-    def _validate_completeness(
-        self,
-        result: PipelineResult,
-        eager_store: dict[str, DataFrame],
-    ) -> None:
+    def _validate_completeness(self, result: PipelineResult) -> None:
         """Every child's parent must be in the chunk or eager
-        (reference relationships.py:545-616)."""
+        (reference relationships.py:545-616).  Each link's probe is the
+        batch run's own (``fluent._orphans``); up to 3 orphan keys per
+        link, all links in ONE job."""
+        probes, messages = [], []
         for spec in self._links:
             if spec.child not in result._tables_dict:
                 continue
-            # internal frames: TempField by-fields are valid match keys
-            child = result._internal[spec.child]
             (cf, pf), *_ = spec.by.items()
-            parents = []
-            if spec.parent in result._internal:
-                parents.append(result._internal[spec.parent].select(qcol(pf).alias("__p")))
-            if spec.parent in self._eager_internal:
-                parents.append(
-                    self._eager_internal[spec.parent].select(qcol(pf).alias("__p"))
+            probe = result._orphans.get(id(spec))
+            if probe is None:
+                # no parent rows in the chunk and the parent is not eager
+                rows = result._internal[spec.child].filter(f"{bq(cf)} IS NOT NULL")
+                messages.append(
+                    f"chunk has {spec.child}.{cf} but no '{spec.parent}' rows "
+                    f"(and '{spec.parent}' is not eager)"
                 )
-            if not parents:
-                missing = child.filter(qcol(cf).isNotNull()).limit(1).collect()
-                if missing:
-                    raise RelationshipIncompleteError(
-                        f"chunk has {spec.child}.{cf} but no '{spec.parent}' rows "
-                        f"(and '{spec.parent}' is not eager)"
-                    )
-                continue
-            pool = parents[0]
-            for p in parents[1:]:
-                pool = pool.unionByName(p)
-            orphan = (
-                child.filter(qcol(cf).isNotNull())
-                .join(F.broadcast(pool.dropDuplicates()), child[bq(cf)] == pool["__p"], "left_anti")
-                .limit(3)
-                .collect()
-            )
-            if orphan:
-                hints = [r[cf] for r in orphan]
-                raise RelationshipIncompleteError(
+            else:
+                rows = probe()
+                messages.append(
                     f"chunk-incomplete relationship {spec.child}.{cf} -> "
-                    f"{spec.parent}.{pf}: missing parent keys {hints}"
+                    f"{spec.parent}.{pf}"
                 )
+            probes.append(
+                rows.select(
+                    cexpr(f"{len(probes)} AS __link"),
+                    cexpr(f"CAST({bq(cf)} AS STRING) AS __key"),
+                ).limit(3)
+            )
+        found: dict[int, list] = {}
+        for r in reduce(DataFrame.unionByName, probes).collect() if probes else ():
+            found.setdefault(r["__link"], []).append(r["__key"])
+        if found:
+            i = min(found)
+            raise RelationshipIncompleteError(
+                f"{messages[i]}: missing parent keys {found[i]}"
+            )
+
+    def _flush_keys(self, result: PipelineResult, name: str) -> Optional[list[str]]:
+        """The table's keys as columns of the public frame it flushes
+        (``result._public_map``); a single TempField key flushes by the
+        injected ``id`` that carries its value."""
+        keys = result._key_cols.get(name)
+        if not keys:
+            return None
+        public_of = {i: p for p, i in result._public_map[name]}
+        if len(keys) == 1 and keys[0] not in public_of and not any(
+            f.name == "id" and not f.is_temp
+            for em in self._emissions
+            if em.table == name
+            for f in em.fields
+        ):
+            return ["id"]
+        missing = [k for k in keys if k not in public_of]
+        if not missing:
+            return [public_of[k] for k in keys]
+        if type(self._strategy) is KeyCompleteFlushStrategy:
+            return None  # plain append never reads the keys
+        raise ValueError(
+            f"table '{name}': key {missing[0]!r} has no public column to flush by"
+        )
 
     # -- execution ----------------------------------------------------------
 
     def run(self) -> StreamResult:
-        spark = self._get_spark()
         if any(spec.from_dict is None for spec in self._index_specs):
             raise ValueError(
                 "streaming pipelines cannot use traversal-built build_index "
@@ -328,7 +320,6 @@ class StreamPipeline(PipelineBuilder):
                 "index with from_dict or use link_to"
             )
         store = TableStore()
-        eager_store: dict[str, DataFrame] = {}
         eager_internal: dict[str, DataFrame] = {}
         errors_store: dict[str, DataFrame] = {}
 
@@ -337,29 +328,30 @@ class StreamPipeline(PipelineBuilder):
                 raise ValueError("load_eager() requires stream(eager_roots=...)")
             # all eager roots map against pipeline root 0, like a
             # sequential chunk (multi-doc eager dimensions merge correctly)
-            eager_df = self._combined_root_df(spark, tuple(self._eager_roots))
-            eager_b = self._clone_with_roots([eager_df], order_col="__roword")
+            eager_b = self._clone_with_roots([_Docs(self._eager_roots)])
             eager_res = eager_b.run(table_filter=set(self._eager_tables))
             for t in self._eager_tables:
                 if t in eager_res._tables_dict:
                     df = eager_res._tables_dict[t].cache()
                     df.count()  # materialize the dimension once
-                    eager_store[t] = df
                     internal_df = eager_res._internal[t].cache()
                     eager_internal[t] = internal_df
                     store.put(t, df)
 
         self._eager_internal = eager_internal
-        table_keys = self._table_key_map()
         n = 0
         for chunk in self._source.chunks():
             n += 1
-            result = self._run_chunk(spark, chunk)
-            self._validate_completeness(result, eager_store)
-            for name, df in result._tables_dict.items():
-                if name in self._eager_tables:
-                    continue
-                self._strategy.flush(store, name, df, table_keys.get(name))
+            result = self._run_chunk(chunk)
+            self._validate_completeness(result)
+            # every table's keys resolve (or raise) before the first flush
+            keys = {
+                t: self._flush_keys(result, t)
+                for t in result._tables_dict
+                if t not in self._eager_tables
+            }
+            for name, k in keys.items():
+                self._strategy.flush(store, name, result._tables_dict[name], k)
             for name, err in result.errors.items():
                 old = errors_store.get(name)
                 errors_store[name] = (
@@ -372,22 +364,6 @@ class StreamPipeline(PipelineBuilder):
             for name, df in store.tables.items():
                 self._sink.write(name, df)
         return StreamResult(store.tables, n, errors_store)
-
-    def _table_key_map(self) -> dict[str, list[str]]:
-        keys: dict[str, list[str]] = {}
-        for em in self._emissions:
-            if em.join_on:
-                keys.setdefault(em.table, em.join_on)
-        return keys
-
-
-def _as_obj(root: Any) -> dict:
-    if isinstance(root, dict):
-        return root
-    raise TypeError(
-        "sequential chunk roots must be JSON objects (dicts); got "
-        f"{type(root).__name__}"
-    )
 
 
 def stream(

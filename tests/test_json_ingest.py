@@ -17,6 +17,7 @@ import pytest
 from etielle_spark.fluent import (
     _null_only_paths,
     _prepare_obj,
+    _read_docs,
     _read_prepared_json,
     _variant_paths,
     _voidify,
@@ -146,18 +147,25 @@ def test_dict_root_tables_have_no_python_scan(spark):
 
 
 def test_stream_chunk_frame_has_no_python_scan(spark):
+    """A sequential chunk's roots read through the same reader as a dict
+    root: one row per document, none through a Python worker."""
     from etielle_spark import Field, get
     from etielle_spark.streaming import PreSegmentedChunkSource, stream
 
     rng = random.Random(11)
     users = [_user(rng, i) for i in range(30)]
+    frame, _ = _read_docs(spark, users)
+    _no_python_rdd(frame)
+    assert [r["__roword"] for r in frame.collect()] == list(range(30))
     pipe = (
         stream(PreSegmentedChunkSource([users[:15], users[15:]]), spark=spark)
         .map_to("users", fields=[Field("id", get("id")), Field("name", get("name"))],
                 join_on=["id"])
     )
-    _no_python_rdd(pipe._combined_root_df(spark, tuple(users)))
-    assert pipe.run()["users"].count() == 30
+    res = pipe.run()
+    assert res["users"].count() == 30
+    for df in res.tables.values():
+        _no_python_rdd(df)
 
 
 def test_engine_has_no_python_parallelize():
@@ -169,6 +177,22 @@ def test_engine_has_no_python_parallelize():
         for path in sorted(root.rglob("*.py"))
         for n, line in enumerate(path.read_text().splitlines(), 1)
         if re.search(r"\.parallelize\(", line)
+    ]
+    assert hits == []
+
+
+def test_streaming_has_no_reader_of_its_own():
+    """Stream chunks and eager roots read through the batch root reader
+    (``fluent._read_docs``); no module under ``streaming/`` builds JSON
+    payloads itself."""
+    import etielle_spark.streaming
+
+    root = Path(etielle_spark.streaming.__file__).parent
+    hits = [
+        f"{path.name}:{n}"
+        for path in sorted(root.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"_read_prepared_json|read_json_payloads|_prepare_obj", line)
     ]
     assert hits == []
 

@@ -571,3 +571,99 @@ def test_bind_many_to_one_dotted_key_names(spark):
     assert sorted(tuple(r) for r in bound2.collect()) == [
         (1, "a", 1), (2, "b", 2), (3, "c", None)
     ]
+
+
+# -- moved from the round-5 fix file: variant-key canonical form ----------
+
+
+def test_key_canon_2_53_neighbors_link_to(spark):
+    """Integer keys above 2**53 must stay distinct in link joins: the
+    old double-canonicalization mapped 2**53 and 2**53 + 1 to the same
+    value (a string key in the parent set makes the key variant-typed,
+    which is the path that canonicalizes)."""
+    from etielle_spark import Field, TempField, etl, get
+
+    big = 2**53
+    data = {
+        "parents": [
+            {"pid": big, "name": "P-even"},
+            {"pid": big + 1, "name": "P-odd"},
+            {"pid": "x", "name": "P-str"},
+        ],
+        "children": [
+            {"ck": big, "t": "c-even"},
+            {"ck": big + 1, "t": "c-odd"},
+        ],
+    }
+    result = (
+        etl(data, spark=spark)
+        .goto("parents").each()
+        .map_to("par", fields=[
+            Field("name", get("name")), TempField("pid", get("pid")),
+            Field("id", get("name")),
+        ], join_on=["name"])
+        .goto_root()
+        .goto("children").each()
+        .map_to("ch", fields=[Field("t", get("t")), TempField("ck", get("ck"))],
+                join_on=["t"])
+        .link_to("par", by={"ck": "pid"}, fk="parent_name")
+        .run()
+    )
+    got = {r["t"]: r["parent_name"] for r in result.rows("ch")}
+    assert got == {"c-even": "P-even", "c-odd": "P-odd"}
+
+
+def test_key_canon_2_53_neighbors_backlink(spark):
+    """Same 2**53-neighbor distinction through backlink's id-list join."""
+    from etielle_spark import Field, TempField, etl, get
+
+    big = 2**53
+    data = {
+        "qs": [{"qid": "q1", "cids": [big + 1, "pad"]}],
+        "cs": [
+            {"cid": big, "t": "c-even"},
+            {"cid": big + 1, "t": "c-odd"},
+        ],
+    }
+    result = (
+        etl(data, spark=spark)
+        .goto("qs").each()
+        .map_to("q", fields=[Field("qid", get("qid")),
+                             TempField("cids", get("cids"))], join_on=["qid"])
+        .goto_root()
+        .goto("cs").each()
+        .map_to("c", fields=[Field("t", get("t")),
+                             TempField("cid", get("cid"))], join_on=["t"])
+        .backlink("q", "c", "children", by={"cids": "cid"})
+        .run()
+    )
+    rows = result.rows("q")
+    assert len(rows) == 1
+    assert [c["t"] for c in rows[0]["children"]] == ["c-odd"]
+
+
+def test_key_canon_int_float_still_match(spark):
+    """The exact-integer canonical form must keep Python numeric
+    equality: 7 (int) and 7.0 (float) are the SAME key."""
+    from etielle_spark import Field, TempField, etl, get
+
+    data = {
+        "parents": [{"pid": 7.0, "name": "P-float"}, {"pid": "s", "name": "P-s"}],
+        "children": [{"ck": 7, "t": "c-int"}],
+    }
+    result = (
+        etl(data, spark=spark)
+        .goto("parents").each()
+        .map_to("par", fields=[
+            Field("name", get("name")), TempField("pid", get("pid")),
+            Field("id", get("name")),
+        ], join_on=["name"])
+        .goto_root()
+        .goto("children").each()
+        .map_to("ch", fields=[Field("t", get("t")), TempField("ck", get("ck"))],
+                join_on=["t"])
+        .link_to("par", by={"ck": "pid"}, fk="parent_name")
+        .run()
+    )
+    got = {r["t"]: r["parent_name"] for r in result.rows("ch")}
+    assert got == {"c-int": "P-float"}

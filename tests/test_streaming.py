@@ -913,3 +913,201 @@ def test_stream_session_sizes_state_partitions_and_keeps_parent_conf(spark, tmp_
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+# -- a sequential chunk reads and checks like a batch run ------------------
+
+
+def test_variant_key_link_stream(spark):
+    """A link key that mixes strings and numbers within one chunk is
+    VARIANT-typed; the completeness probe joins it on the same canonical
+    form as the batch link (7 matches 7.0, never '7')."""
+    recs = [
+        {"orders": [{"id": 1, "c": "x"}], "items": [{"id": 10, "order_id": 1}]},
+        {"orders": [{"id": "b", "c": "y"}], "items": [{"id": 20, "order_id": "b"}]},
+    ]
+
+    def pipe(source):
+        return (
+            stream(source, spark=spark)
+            .goto("orders").each()
+            .map_to("orders", fields=[Field("id", get("id")), Field("c", get("c"))],
+                    join_on=["c"])
+            .goto_root(0).goto("items").each()
+            .map_to("items", fields=[Field("id", get("id")),
+                                     Field("order_id", get("order_id"))],
+                    join_on=["id"])
+            .link_to("orders", by={"order_id": "id"})
+        )
+
+    merged = {k: [x for r in recs for x in r[k]] for k in ("orders", "items")}
+    batch = (
+        etl(merged, spark=spark)
+        .goto("orders").each()
+        .map_to("orders", fields=[Field("id", get("id")), Field("c", get("c"))],
+                join_on=["c"])
+        .goto_root(0).goto("items").each()
+        .map_to("items", fields=[Field("id", get("id")),
+                                 Field("order_id", get("order_id"))],
+                join_on=["id"])
+        .link_to("orders", by={"order_id": "id"})
+        .run()
+    )
+    res = pipe(PreSegmentedChunkSource([recs])).run()
+    assert res["items"].count() == batch["items"].count() == 2
+    assert sorted(r["c"] for r in res["orders"].collect()) == ["x", "y"]
+
+    bad = [
+        {"orders": [{"id": 7, "c": "x"}, {"id": "s", "c": "y"}],
+         "items": [{"id": 10, "order_id": 7.0}, {"id": 20, "order_id": "7"}]},
+    ]
+    with pytest.raises(RelationshipIncompleteError, match=r"items\.order_id -> orders\.id"):
+        pipe(OneRecordPerChunkSource(bad)).run()
+
+
+def _doc_pipeline(p, doc):
+    from etielle_spark import index, key
+
+    p = p.map_to("root", fields=[Field(f"f_{k}", get(k)) for k in doc])
+    p = p.goto_root(0).each().map_to("entries", fields=[Field("k", key()), Field("i", index())])
+    if "posts" in doc:
+        p = (
+            p.goto_root(0).goto("posts").each()
+            .map_to("posts", fields=[Field("pid", get("pid")), Field("tags", get("tags"))],
+                    join_on=["pid"])
+        )
+    return p
+
+
+@pytest.mark.parametrize("seed", [6, 19])
+def test_one_document_chunk_equals_batch(spark, seed):
+    """A one-document sequential chunk under the append strategy gives
+    the same tables as ``etl(doc).run()``: both read the document through
+    the same reader and compile the same plan."""
+    import random
+
+    from test_json_ingest import CORPUS
+
+    from etielle_spark.streaming import KeyCompleteFlushStrategy
+
+    rng = random.Random(seed)
+    for case in sorted(CORPUS):
+        if not CORPUS[case]:
+            continue
+        doc = rng.choice(CORPUS[case])
+        want = _doc_pipeline(etl(doc, spark=spark), doc).run()
+        got = _doc_pipeline(
+            stream(OneRecordPerChunkSource([doc]), spark=spark,
+                   flush_strategy=KeyCompleteFlushStrategy()),
+            doc,
+        ).run()
+        assert set(got.tables) == set(want._tables_dict), case
+        for name, df in want._tables_dict.items():
+            assert got[name].schema == df.schema, (case, name)
+            assert sorted(map(repr, got[name].collect())) == sorted(
+                map(repr, df.collect())
+            ), (case, name)
+
+
+def test_sequential_chunk_list_root_and_roword_key(spark):
+    """A sequential chunk takes a list root and a dict root with a user
+    key named ``__roword`` like ``etl()`` does; the later root's write
+    wins the keyed merge."""
+    from etielle_spark import key
+    from etielle_spark.fluent import _plain_py
+
+    roots = [
+        [{"id": 1, "v": "a"}, {"id": 2, "v": "b"}],
+        {"__roword": {"id": 2, "v": "B"}, "x": {"id": 3, "v": "c"}},
+    ]
+    res = (
+        stream(PreSegmentedChunkSource([roots]), spark=spark)
+        .each()
+        .map_to("t", fields=[Field("id", get("id")), Field("v", get("v")),
+                             Field("k", key())], join_on=["id"])
+        .run()
+    )
+    # the roots disagree on list vs dict, so the root reads as a variant
+    got = {tuple(_plain_py(x) for x in r) for r in res["t"].select("id", "v", "k").collect()}
+    assert got == {(1, "a", None), (2, "B", "__roword"), (3, "c", "x")}
+
+
+def test_third_link_orphan_names_that_link(spark):
+    recs = [
+        {
+            "p": [{"id": 1}],
+            "c1": [{"id": 10, "pid": 1}],
+            "c2": [{"id": 20, "pid": 1}],
+            "c3": [{"id": 30, "pid": 99}, {"id": 31, "pid": 1}],
+        }
+    ]
+    pipe = stream(OneRecordPerChunkSource(recs), spark=spark)
+    pipe = pipe.goto("p").each().map_to("p", fields=[Field("id", get("id"))], join_on=["id"])
+    for c in ("c1", "c2", "c3"):
+        pipe = (
+            pipe.goto_root(0).goto(c).each()
+            .map_to(c, fields=[Field("id", get("id")), Field("pid", get("pid"))],
+                    join_on=["id"])
+            .link_to("p", by={"pid": "id"})
+        )
+    with pytest.raises(RelationshipIncompleteError) as err:
+        pipe.run()
+    msg = str(err.value)
+    assert "c3.pid -> p.id" in msg and "99" in msg
+    assert "c1." not in msg and "c2." not in msg
+
+
+def test_upsert_by_temp_field_key(spark):
+    """A single TempField key flushes by the injected ``id`` that carries
+    its value; a key with no public column raises before any flush."""
+    from etielle_spark.streaming import KeyCompleteFlushStrategy
+    from etielle_spark.streaming.pipeline import FlushStrategy
+
+    recs = [
+        {"users": [{"uid": "u1", "v": 1}]},
+        {"users": [{"uid": "u1", "v": 2}, {"uid": "u2", "v": 5}]},
+    ]
+
+    def pipe(strategy, fields):
+        return (
+            stream(OneRecordPerChunkSource(recs), spark=spark, flush_strategy=strategy)
+            .goto("users").each()
+            .map_to("users", fields=fields, join_on=["uid"])
+        )
+
+    fields = [TempField("uid", get("uid")), Field("v", get("v"))]
+    res = pipe(UpsertFlushStrategy("update"), fields).run()
+    assert sorted(tuple(r) for r in res["users"].select("id", "v").collect()) == [
+        ("u1", 2),
+        ("u2", 5),
+    ]
+
+    class Spy(FlushStrategy):
+        calls = 0
+
+        def flush(self, store, name, df, keys):
+            Spy.calls += 1
+
+    shadowed = fields + [Field("id", get("v"))]
+    with pytest.raises(ValueError, match=r"table 'users': key 'uid'"):
+        pipe(Spy(), shadowed).run()
+    assert Spy.calls == 0
+    # plain append never reads the keys, so it needs no public key column
+    assert pipe(KeyCompleteFlushStrategy(), shadowed).run()["users"].count() == 3
+
+
+def test_empty_sequential_chunk(spark):
+    """A sequential chunk with no roots reads as zero documents and flushes
+    nothing, before or after a chunk with rows."""
+    doc = {"users": [{"id": 1, "v": 2}]}
+    for chunks in ([[]], [[], [doc]], [[doc], []]):
+        res = (
+            stream(PreSegmentedChunkSource(chunks), spark=spark,
+                   flush_strategy=UpsertFlushStrategy("update"))
+            .goto("users").each()
+            .map_to("users", fields=[Field("id", get("id")), Field("v", get("v"))],
+                    join_on=["id"])
+            .run()
+        )
+        want = [] if chunks == [[]] else [(1, 2)]
+        assert sorted(map(tuple, res["users"].collect())) == want, chunks
