@@ -9,56 +9,95 @@ completeness is checked with the batch run's own orphan probes.  Every
 chunk recompiles its plan; only the memoized expressions (``cexpr``) are
 reused.  "Evict" is just micro-batch scope.
 
-Flush strategies (reference: etielle/chunking.py:281-677):
+Flush strategies (reference: etielle/chunking.py:281-677) each append the
+chunk's table frame to the one ``TableStore`` as a part; reading a table
+resolves its parts with one union and one aggregate, so the plan does not
+get deeper with every chunk:
 - KeyCompleteFlushStrategy: plain append.
-- UpsertFlushStrategy("update"): key conflict -> replace whole row.
-- UpsertFlushStrategy("skip"):   key conflict -> keep existing row.
+- UpsertFlushStrategy("update"): key conflict -> the latest chunk's row.
+- UpsertFlushStrategy("skip"):   key conflict -> the first chunk's row.
 - BufferedKeyFlushStrategy: the reference's bounded-LRU re-merge.  A key
-  still in the LRU (``max_keys`` most recently flushed) merges onto its
-  stored row, last non-None write wins per column; a key evicted from
-  the LRU re-inserts as a new row.  Only the key sets live on the driver.
+  still in the LRU (``max_keys`` most recently flushed) merges onto the
+  row it last wrote, last non-None write wins per column; a key evicted
+  from the LRU starts a new row.  Only the key sets live on the driver.
 """
 
 from __future__ import annotations
 
+from collections import OrderedDict
 from functools import reduce
 from typing import Any, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..colcache import bq, cexpr, qcol
+from ..colcache import bq, cexpr
 from ..fluent import PipelineBuilder, PipelineResult, _Docs
 from .chunks import Chunk, ChunkSource, RelationshipIncompleteError
 
+# a table's 16th part checkpoints its resolved frame into one part
+_PARTS_PER_CHECKPOINT = 16
+
 
 class TableStore:
-    """Accumulated output tables across chunk flushes.
+    """A stream's state: each table is a list of parts.
 
-    In-memory DataFrame store for tests/drivers; a production sink swaps
-    this for Delta/JDBC while keeping the same strategy semantics.  Every
-    ``checkpoint_every`` puts, the accumulated plan is truncated with
-    ``localCheckpoint`` — otherwise hundreds of chunk flushes build a
-    union/anti-join lineage that overwhelms the optimizer.
-    """
+    ``add`` appends a part tagged ``__chunk``, the store-wide write
+    ordinal (``writes`` is the next one).  Reading a table unions its
+    parts; a table added with ``keys`` keeps one row per key, each column
+    ``max_by(column, order)`` with ``order`` SQL text over ``__chunk``
+    (``{c}`` is the column).  A column VARIANT in any part is cast to
+    VARIANT in all, and a VARIANT key groups on its JSON form.  ``put``
+    keeps a finished frame (eager dimensions); ``lru`` is the per-run key
+    cache of ``BufferedKeyFlushStrategy``."""
 
-    def __init__(self, checkpoint_every: int = 16) -> None:
-        self._tables: dict[str, DataFrame] = {}
-        self._puts: dict[str, int] = {}
-        self._checkpoint_every = checkpoint_every
-
-    def get(self, name: str) -> Optional[DataFrame]:
-        return self._tables.get(name)
+    def __init__(self) -> None:
+        self._parts: dict[str, list[DataFrame]] = {}
+        self._fold: dict[str, tuple[list[str], str]] = {}
+        self._fixed: dict[str, DataFrame] = {}
+        self.writes = 0
+        self.lru: "OrderedDict[tuple, int]" = OrderedDict()
 
     def put(self, name: str, df: DataFrame) -> None:
-        n = self._puts.get(name, 0) + 1
-        self._puts[name] = n
-        if self._checkpoint_every and n % self._checkpoint_every == 0:
-            df = df.localCheckpoint(eager=True)
-        self._tables[name] = df
+        self._fixed[name] = df
+
+    def add(self, name: str, df: DataFrame, keys=None, order: str = "__chunk") -> None:
+        parts = self._parts.setdefault(name, [])
+        parts.append(df.select("*", F.lit(self.writes).alias("__chunk")))
+        self.writes += 1
+        if keys:
+            self._fold[name] = (list(keys), order)
+        if len(parts) == _PARTS_PER_CHECKPOINT:
+            self._parts[name] = [self._resolve(name).localCheckpoint(eager=True)]
+
+    def _resolve(self, name: str) -> DataFrame:
+        parts = self._parts[name]
+        var = {f.name for p in parts for f in p.schema if f.dataType == T.VariantType()}
+        cols = list(dict.fromkeys(c for p in parts for c in p.columns))
+        if var:
+            parts = [p.select(*[
+                cexpr(f"CAST({bq(f.name)} AS VARIANT) AS {bq(f.name)}")
+                if f.name in var and f.dataType != T.VariantType()
+                else bq(f.name)
+                for f in p.schema
+            ]) for p in parts]
+        df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+        if name not in self._fold:
+            return df
+        keys, order = self._fold[name]
+        kc = {k: bq("__kc_" + k) for k in keys if k in var}
+        return df.groupBy(*[
+            cexpr(f"to_json({bq(k)}) AS {kc[k]}") if k in kc else bq(k) for k in keys
+        ]).agg(*[
+            cexpr(f"max_by({bq(c)}, {order.replace('{c}', bq(c))}) AS {bq(c)}")
+            for c in cols if c not in keys
+        ]).select(*[
+            cexpr(f"parse_json({kc[c]}) AS {bq(c)}") if c in kc else bq(c) for c in cols
+        ])
 
     @property
     def tables(self) -> dict[str, DataFrame]:
-        return dict(self._tables)
+        resolved = {n: self._resolve(n).drop("__chunk", "__gen") for n in self._parts}
+        return {**self._fixed, **resolved}
 
 
 class FlushStrategy:
@@ -76,13 +115,13 @@ class KeyCompleteFlushStrategy(FlushStrategy):
     """Append-only (chunking.py:281-315); the default."""
 
     def flush(self, store, name, df, keys):
-        old = store.get(name)
-        store.put(name, df if old is None else old.unionByName(df, allowMissingColumns=True))
+        store.add(name, df)
 
 
 class UpsertFlushStrategy(FlushStrategy):
     """'update': PK conflict -> overwrite whole row (chunking.py:361-501);
-    'skip': PK conflict -> keep existing row (chunking.py:503-540)."""
+    'skip': PK conflict -> keep existing row (chunking.py:503-540).  A
+    chunk's keyed frame has one row per key, so whole rows win."""
 
     def __init__(self, mode: str = "update"):
         if mode not in ("update", "skip"):
@@ -90,94 +129,55 @@ class UpsertFlushStrategy(FlushStrategy):
         self.mode = mode
 
     def flush(self, store, name, df, keys):
-        old = store.get(name)
-        if old is None or not keys:
-            KeyCompleteFlushStrategy().flush(store, name, df, keys)
-            return
-        key_refs = [bq(k) for k in keys]
-        if self.mode == "update":
-            kept_old = old.join(df.select(*key_refs).dropDuplicates(), keys, "left_anti")
-            store.put(name, kept_old.unionByName(df, allowMissingColumns=True))
-        else:
-            fresh = df.join(old.select(*key_refs).dropDuplicates(), keys, "left_anti")
-            store.put(name, old.unionByName(fresh, allowMissingColumns=True))
+        store.add(name, df, keys, "__chunk" if self.mode == "update" else "-__chunk")
 
 
 class BufferedKeyFlushStrategy(FlushStrategy):
     """Bounded LRU of recently-flushed keys (chunking.py:543-677).
 
-    A key still in the LRU merges onto its existing row
-    (last-non-None-write-wins per column); a key EVICTED from the LRU
-    re-inserts as a new row — the reference's documented heuristic, where
-    correctness is bounded by ``max_keys`` and the worst-case key
-    reappearance gap.  Divergence from the reference (rows have no
-    Python identity here): a cached key with earlier eviction-duplicates
-    updates ALL rows of that key, not just the cached instance.
-    Chunk key sets are collected driver-side — bounded by chunk size,
-    exactly like the reference's per-chunk instance dict."""
+    A row is a (key, generation ``__gen``).  A key still in the LRU
+    reuses its generation, so it merges onto the row it last wrote (last
+    non-None write wins per column); a new or EVICTED key takes this
+    write's ordinal and starts a new row — the reference's heuristic,
+    correct as far as ``max_keys`` covers the key reappearance gap.  The
+    LRU is the store's (one run).  A chunk's keys are collected (bounded
+    by chunk size, like the reference's per-chunk instance dict), enter
+    the LRU in JSON-form order, and the least recent past ``max_keys``
+    go after the chunk."""
 
     def __init__(self, max_keys: int = 10_000):
         if max_keys < 1:
             raise ValueError(f"max_keys must be >= 1, got {max_keys}")
         self.max_keys = max_keys
-        from collections import OrderedDict
-
-        self._lru: "OrderedDict[tuple, None]" = OrderedDict()
-
-    def _record(self, name: str, keys: list[tuple]) -> None:
-        for k in keys:
-            ck = (name, k)
-            if ck in self._lru:
-                self._lru.move_to_end(ck)
-            else:
-                self._lru[ck] = None
-        while len(self._lru) > self.max_keys:
-            self._lru.popitem(last=False)
 
     def flush(self, store, name, df, keys):
-        old = store.get(name)
         if not keys:
-            KeyCompleteFlushStrategy().flush(store, name, df, keys)
+            store.add(name, df)
             return
-        key_refs = [bq(k) for k in keys]
-        incoming = [tuple(r) for r in df.select(*key_refs).dropDuplicates().collect()]
-        if old is None:
-            KeyCompleteFlushStrategy().flush(store, name, df, keys)
-            self._record(name, incoming)
-            return
-        cached = [k for k in incoming if (name, k) in self._lru]
+        # a key is known by its JSON form, whatever type a chunk read it as
+        kc = [f"__kc{i}" for i in range(len(keys))]
+        canon = df.select("*", *[
+            cexpr(f"to_json(CAST({bq(k)} AS VARIANT)) AS {c}") for k, c in zip(keys, kc)
+        ])
+        gen, lru, cached = store.writes, store.lru, {}
+        for k in sorted(tuple(r) for r in canon.select(*kc).collect()):
+            if (name, k) in lru:
+                cached[k] = lru[(name, k)]
+            lru[(name, k)] = lru.pop((name, k), gen)
+        while len(lru) > self.max_keys:
+            lru.popitem(last=False)
         if cached:
-            spark = df.sparkSession
-            cached_df = spark.createDataFrame(cached, df.select(*key_refs).schema)
-            upd_new = df.join(F.broadcast(cached_df), list(keys), "left_semi")
-            ins_new = df.join(F.broadcast(cached_df), list(keys), "left_anti")
-            # Single left join over the store: cached-key rows merge
-            # column-wise, every other row passes through (the probe misses,
-            # coalesce keeps the old value).  `old` must appear exactly ONCE
-            # in the new plan — a touched/rest split references it twice and
-            # triples the plan per flush, exploding analysis time long
-            # before the TableStore's every-16-puts checkpoint can truncate.
-            ocols = [c for c in old.columns if c not in keys]
-            ncols = set(upd_new.columns)
-            merged = (
-                old.alias("o")
-                .join(F.broadcast(upd_new).alias("n"), list(keys), "left")
-                .select(
-                    *[qcol(k) for k in keys],
-                    *[
-                        (
-                            F.coalesce(F.col(f"n.{bq(c)}"), F.col(f"o.{bq(c)}"))
-                            if c in ncols
-                            else F.col(f"o.{bq(c)}")
-                        ).alias(c)
-                        for c in ocols
-                    ],
-                )
+            gens = df.sparkSession.createDataFrame(
+                [(*k, g) for k, g in cached.items()],
+                ", ".join(f"{c} string" for c in kc) + ", __gen int",
             )
-            store.put(name, merged.unionByName(ins_new, allowMissingColumns=True))
+            df = canon.join(F.broadcast(gens), kc, "left").select(
+                *[bq(c) for c in df.columns],
+                F.coalesce(F.col("__gen"), F.lit(gen)).alias("__gen"),
+            )
         else:
-            store.put(name, old.unionByName(df, allowMissingColumns=True))
-        self._record(name, incoming)
+            df = df.select("*", F.lit(gen).alias("__gen"))
+        store.add(name, df, [*keys, "__gen"], "IF({c} IS NULL, NULL, __chunk)")
 
 
 class StreamResult:
@@ -319,9 +319,8 @@ class StreamPipeline(PipelineBuilder):
                 "(reference restriction, fluent.py:1797-1829); seed the "
                 "index with from_dict or use link_to"
             )
-        store = TableStore()
+        store, errors = TableStore(), TableStore()
         eager_internal: dict[str, DataFrame] = {}
-        errors_store: dict[str, DataFrame] = {}
 
         if self._eager_tables:
             if not self._eager_roots:
@@ -353,17 +352,15 @@ class StreamPipeline(PipelineBuilder):
             for name, k in keys.items():
                 self._strategy.flush(store, name, result._tables_dict[name], k)
             for name, err in result.errors.items():
-                old = errors_store.get(name)
-                errors_store[name] = (
-                    err if old is None else old.unionByName(err, allowMissingColumns=True)
-                )
+                errors.add(name, err)
+        tables = store.tables
         if self._sink is not None:
             # the sink receives the strategy-resolved final tables (incl.
             # eager dimensions); per-micro-batch exactly-once writes belong
             # to the foreachBatch adapter (streaming/windows.py)
-            for name, df in store.tables.items():
+            for name, df in tables.items():
                 self._sink.write(name, df)
-        return StreamResult(store.tables, n, errors_store)
+        return StreamResult(tables, n, errors.tables)
 
 
 def stream(

@@ -12,6 +12,8 @@ reproduce (reference executor.py:181-196, 272-353; instances.py:31-85).
 - a field no row of the key supplied is absent (None).
 """
 
+import json
+
 from etielle_spark.policies import (
     AddPolicy,
     AppendPolicy,
@@ -60,3 +62,43 @@ def reference_merge(rows, policies):
         for f, v in vals.items():
             state[f] = _step(policies.get(f), state.get(f, _ABSENT), v)
     return out
+
+
+def reference_flush(chunks, strategy, max_keys=None):
+    """Pure-Python replay of a stream's flush strategies over one keyed
+    table.  ``chunks``: per chunk, ``(key_tuple, {field: value})`` rows in
+    arrival order; each chunk is first merged on its own (last write
+    wins, ``reference_merge`` with no policies).  ``strategy``:
+
+    - ``"append"``: every chunk's merged rows;
+    - ``"update"`` / ``"skip"``: per key, the latest / the first chunk's row;
+    - ``"buffered"``: the bounded LRU (``max_keys``) of the reference's
+      BufferedKeyFlushStrategy.  A key still in the LRU copies its
+      non-None values onto the row it last wrote; a new or evicted key
+      starts a new row.  A chunk's keys enter the LRU in the order of
+      their JSON form; entries past ``max_keys`` are evicted after the
+      chunk.
+
+    Returns the table as a list of ``{field: value}`` rows."""
+    out: dict = {}
+    lru: dict = {}  # key -> the row it last wrote (insertion order = recency)
+    for ordinal, rows in enumerate(chunks):
+        merged = reference_merge(rows, {})
+        if strategy == "append":
+            out.update({(k, ordinal): v for k, v in merged.items()})
+        elif strategy == "update":
+            out.update(merged)
+        elif strategy == "skip":
+            for k, v in merged.items():
+                out.setdefault(k, v)
+        else:
+            for k in sorted(merged, key=lambda k: [json.dumps(p) for p in k]):
+                row = lru.pop(k, None)
+                if row is None:
+                    row = out[(k, ordinal)] = dict(merged[k])
+                else:
+                    row.update({f: v for f, v in merged[k].items() if v is not None})
+                lru[k] = row
+            while len(lru) > max_keys:
+                del lru[next(iter(lru))]
+    return list(out.values())

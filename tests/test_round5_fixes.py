@@ -201,68 +201,6 @@ def test_multimodal_ops_skip_null_payloads(spark):
     assert sample_frames(df, "id", n_frames=2).count() == 2  # 1 doc x 2
 
 
-def test_policy_merge_matches_reference_fold(spark):
-    """A single-emission keyed merge with every policy equals the
-    pure-Python reference fold — LWW including explicit-None overwrite,
-    Add/Min/Max/Append/FirstNonNull, a TempField that supplies nothing,
-    id injection."""
-    from merge_reference import reference_merge
-
-    from etielle_spark import Field, TempField, etl, get
-    from etielle_spark.policies import (
-        AddPolicy,
-        AppendPolicy,
-        FirstNonNullPolicy,
-        MaxPolicy,
-        MinPolicy,
-    )
-
-    docs = [
-        {"k": 1, "a": 5, "b": "x", "c": 2, "d": None},
-        {"k": 1, "a": None, "b": "y", "c": 7, "d": 9},
-        {"k": 2, "a": 3, "b": None, "c": 1, "d": 4},
-        {"k": 1, "a": 8, "b": "z", "c": 0, "d": None},
-    ]
-    policies = {
-        "a": AddPolicy(),
-        "cmin": MinPolicy(),
-        "cmax": MaxPolicy(),
-        "clist": AppendPolicy(),
-        "dfirst": FirstNonNullPolicy(),
-    }
-    res = (
-        etl({"docs": docs}, spark=spark)
-        .goto("docs").each()
-        .map_to("t", fields=[
-            Field("k", get("k")),
-            Field("a", get("a"), merge=policies["a"]),
-            Field("b", get("b")),                      # LWW w/ None overwrite
-            Field("cmin", get("c"), merge=policies["cmin"]),
-            Field("cmax", get("c"), merge=policies["cmax"]),
-            Field("clist", get("c"), merge=policies["clist"]),
-            Field("dfirst", get("d"), merge=policies["dfirst"]),
-            TempField("tmp", get("a")),
-        ], join_on=["k"])
-        .run()
-    )
-    want = reference_merge(
-        [
-            ((d["k"],), {
-                "k": d["k"], "a": d["a"], "b": d["b"], "cmin": d["c"],
-                "cmax": d["c"], "clist": d["c"], "dfirst": d["d"],
-            })
-            for d in docs
-        ],
-        policies,
-    )
-    got = {(r["k"],): r for r in res.rows("t")}
-    assert got.keys() == want.keys() == {(1,), (2,)}
-    for key, row in got.items():
-        assert row == {"id": key[0], **want[key]}
-    assert want[(1,)]["b"] == "z" and want[(2,)]["b"] is None
-    assert want[(1,)]["a"] == 13 and want[(1,)]["clist"] == [2, 7, 0]
-
-
 def test_line_dedup_drops_boilerplate_keeps_order(spark):
     from etielle_spark.operators.dedup import line_dedup
 

@@ -214,102 +214,3 @@ def test_release_operator_caches(spark):
     assert rows2.keys() == rows.keys()
     assert rows["a"]["shared_frac"] == rows2["a"]["shared_frac"] > 0
     assert rows["c"]["n_shared_grams"] == 0
-
-
-def test_distinct_key_skip_differential(spark):
-    """When the emission root is a groupBy on exactly the join keys,
-    Catalyst proves <=1 row per key and the keyed-merge aggregation is
-    skipped (fluent._keys_provably_distinct).  The skip must be
-    invisible: the same rows as a local frame of the same data (which
-    the proof can't see, so the real merge runs) and as the reference
-    fold, and the skipped plan must actually drop the merge aggregate."""
-    from merge_reference import reference_merge
-
-    from etielle_spark import Field, etl, get
-
-    data = [(1, 10), (1, 20), (2, 5), (3, 7), (3, 1)]
-    src = spark.createDataFrame(data, "k long, v long")
-    grouped = src.groupBy("k").agg(
-        F.sum("v").alias("total"), F.collect_list("v").alias("vs")
-    )
-    unproven = spark.createDataFrame(grouped.collect(), grouped.schema)
-
-    def run(root):
-        res = (
-            etl(root, spark=spark)
-            .map_to(
-                "t",
-                fields=[
-                    Field("k", get("k")),
-                    Field("total", get("total")),
-                    Field("n", get("vs")),
-                ],
-                join_on=["k"],
-            )
-            .run()
-        )
-        rows = sorted(
-            (r["k"], r["total"], tuple(sorted(r["n"]))) for r in res.rows("t")
-        )
-        return res["t"]._jdf.queryExecution().executedPlan().toString(), rows
-
-    plan_on, rows_on = run(grouped)
-    assert "max_by" not in plan_on
-    plan_off, rows_off = run(unproven)
-    assert "max_by" in plan_off
-    vs: dict = {}
-    for k, v in data:
-        vs.setdefault(k, []).append(v)
-    want = reference_merge(
-        [((k,), {"k": k, "total": sum(x), "n": x}) for k, x in vs.items()], {}
-    )
-    want = sorted(
-        (r["k"], r["total"], tuple(sorted(r["n"]))) for r in want.values()
-    )
-    assert rows_on == rows_off == want
-    assert [r[0] for r in rows_on] == [1, 2, 3]
-
-
-def test_distinct_key_skip_not_claimed_on_raw_frames(spark):
-    """A raw frame with duplicate keys must still run the real LWW
-    merge with the skip flag on — the proof can't fire, and last-write
-    -wins semantics stay intact."""
-    from etielle_spark import Field, etl, get
-
-    src = spark.createDataFrame(
-        [(1, "first"), (1, "second"), (2, "only")], "k long, v string"
-    )
-    res = (
-        etl(src, spark=spark)
-        .map_to(
-            "t",
-            fields=[Field("k", get("k")), Field("v", get("v"))],
-            join_on=["k"],
-        )
-        .run()
-    )
-    rows = {r["k"]: r["v"] for r in res.rows("t")}
-    assert rows == {1: "second", 2: "only"}
-
-
-def test_distinct_key_skip_keeps_null_key_filter(spark):
-    """The skip path still drops NULL/empty join keys (the reference's
-    executor.py:189-191 contract) even though the groupBy it replaced
-    was also doing the filtering's plumbing."""
-    from etielle_spark import Field, etl, get
-
-    src = spark.createDataFrame(
-        [(1, 10), (None, 99), (2, 5)], "k long, v long"
-    )
-    grouped = src.groupBy("k").agg(F.sum("v").alias("total"))
-    res = (
-        etl(grouped, spark=spark)
-        .map_to(
-            "t",
-            fields=[Field("k", get("k")), Field("total", get("total"))],
-            join_on=["k"],
-        )
-        .run()
-    )
-    rows = sorted((r["k"], r["total"]) for r in res.rows("t"))
-    assert rows == [(1, 10), (2, 5)]

@@ -175,183 +175,6 @@ def test_lsh_index_query_is_read_only(spark, tmp_path):
     assert len(q_pairs) >= 10  # the duplicated docs pair with their originals
 
 
-def test_merge_seeded_matches_reference_fold(spark):
-    """Seeded random keyed pipelines — one to three emissions into one
-    table, random policies, a list field (LWW by the whole-row struct
-    form), TempField declarations that supply nothing,
-    a field only some emissions declare, None/"" keys — equal the
-    pure-Python reference fold in arrival order.  A dict root is one
-    document, so its arrival order is emission by emission, list items
-    in order; a DataFrame root is one document per row, so it is row by
-    row, emissions in order within a row."""
-    import random
-
-    from merge_reference import reference_merge
-
-    from etielle_spark import Field, TempField, etl, get
-    from etielle_spark.policies import (
-        AddPolicy,
-        AppendPolicy,
-        ExtendPolicy,
-        FirstNonNullPolicy,
-        MaxPolicy,
-        MinPolicy,
-    )
-
-    pol_mk = [
-        lambda: None,
-        AddPolicy,
-        AppendPolicy,
-        ExtendPolicy,
-        MinPolicy,
-        MaxPolicy,
-        FirstNonNullPolicy,
-    ]
-    norm = lambda v: tuple(v) if isinstance(v, list) else v
-    for seed in range(12):
-        rng = random.Random(1000 + seed)
-        docs = [
-            {
-                "k": rng.choice([None, "", "k1", "k2", "k3"]),
-                "a": rng.choice([None, rng.randint(0, 9)]),
-                "a2": rng.choice([None, rng.randint(0, 9)]),
-                "b": rng.choice([None, "", "x", "y"]),
-                "b2": rng.choice([None, "z", "x"]),
-                "c": rng.choice([None, rng.randint(0, 9)]),
-                "l": rng.choice([None, [], [1], [2, 3]]),
-            }
-            for _ in range(rng.randint(4, 24))
-        ]
-        # one policy per field, the same in every declaration (absent =
-        # LWW); Add needs a number, so the string field "b" never takes it
-        policies = {}
-        for n in ("a", "b", "c"):
-            pol = rng.choice(pol_mk)()
-            if pol is not None and not (n == "b" and isinstance(pol, AddPolicy)):
-                policies[n] = pol
-        # a list field: LWW keeps it in the whole-row max_by(struct)
-        pol = rng.choice([None, None, AppendPolicy, ExtendPolicy])
-        if pol is not None:
-            policies["l"] = pol()
-        n_em = 1 + seed % 3
-        df_root = (seed // 3) % 2 == 1
-        # per emission: (field, source key, temp?) — "c" only in some
-        emissions = []
-        for _ in range(n_em):
-            decl = [("k", "k", False)]
-            for n, alts in (("a", ["a", "a2"]), ("b", ["b", "b2"]), ("l", ["l"])):
-                decl.append((n, rng.choice(alts), n_em > 1 and rng.random() < 0.3))
-            if n_em == 1 or rng.random() < 0.5:
-                decl.append(("c", "c", n_em > 1 and rng.random() < 0.3))
-            emissions.append(decl)
-
-        if df_root:
-            root = spark.createDataFrame(
-                [dict(d, seq=i) for i, d in enumerate(docs)],
-                "k string, a long, a2 long, b string, b2 string, c long, "
-                "l array<bigint>, seq long",
-            )
-            b = etl(root, spark=spark, order_col="seq")
-        else:
-            b = etl({"docs": docs}, spark=spark)
-        for decl in emissions:
-            b = b.goto_root()
-            if not df_root:
-                b = b.goto("docs").each()
-            b = b.map_to(
-                "t",
-                fields=[
-                    (TempField if temp else Field)(
-                        n, get(src), merge=policies.get(n)
-                    )
-                    for n, src, temp in decl
-                ],
-                join_on=["k"],
-            )
-        res = b.run()
-
-        public = sorted(
-            {n for decl in emissions for n, _, temp in decl if not temp} - {"k"}
-        )
-        internal = {
-            n
-            for decl in emissions
-            for n, _, _ in decl
-            if all(t for d in emissions for m, _, t in d if m == n)
-        }
-        want = reference_merge(
-            [
-                (
-                    (d["k"],),
-                    {n: d[src] for n, src, temp in decl if not temp or n in internal},
-                )
-                for decl, d in (
-                    [(e, d) for d in docs for e in emissions]
-                    if df_root
-                    else [(e, d) for e in emissions for d in docs]
-                )
-            ],
-            policies,
-        )
-        want = {
-            k: tuple(norm(row.get(n)) for n in public) for k, row in want.items()
-        }
-        rows = res.rows("t")
-        assert all(r["id"] == r["k"] for r in rows)
-        got = {(r["k"],): tuple(norm(r[n]) for n in public) for r in rows}
-        assert got == want, f"seed {seed} ({emissions}, {policies})"
-
-
-def test_skip_path_seeded_self_differential(spark):
-    """Seeded random grouped DataFrame roots produce the same table
-    through the distinct-key skip (Catalyst proves one row per key) as
-    the same rows through the real merge (a local frame the proof can't
-    see), and both equal the reference fold of the rows."""
-    import random
-
-    from merge_reference import reference_merge
-
-    from etielle_spark import Field, etl, get
-
-    for seed in range(5):
-        rng = random.Random(2000 + seed)
-        rows = [
-            (rng.randint(1, 5), rng.randint(0, 99))
-            for _ in range(rng.randint(3, 40))
-        ]
-        src = spark.createDataFrame(rows, "k long, v long")
-        grouped = src.groupBy("k").agg(
-            F.sum("v").alias("s"), F.max("v").alias("m")
-        )
-        unproven = spark.createDataFrame(grouped.collect(), grouped.schema)
-
-        def run(root):
-            res = (
-                etl(root, spark=spark)
-                .map_to(
-                    "t",
-                    fields=[
-                        Field("k", get("k")),
-                        Field("s", get("s")),
-                        Field("m", get("m")),
-                    ],
-                    join_on=["k"],
-                )
-                .run()
-            )
-            return sorted((r["k"], r["s"], r["m"]) for r in res.rows("t"))
-
-        sums, maxes = {}, {}
-        for k, v in rows:
-            sums[k] = sums.get(k, 0) + v
-            maxes[k] = max(maxes.get(k, v), v)
-        want = reference_merge(
-            [((k,), {"k": k, "s": sums[k], "m": maxes[k]}) for k in sums], {}
-        )
-        want = sorted((r["k"], r["s"], r["m"]) for r in want.values())
-        assert run(grouped) == run(unproven) == want, f"seed {seed}"
-
-
 class TestPersistentIVFIndex:
     def _index(self, spark, tmp_path, name="ivf", **kw):
         from etielle_spark.streaming.incremental_ann import PersistentIVFIndex

@@ -273,8 +273,9 @@ def test_structured_streaming_windows(spark):
 
 
 def test_many_chunks_lineage_bounded(spark):
-    """Long chunk streams must not build unbounded plan lineage
-    (TableStore localCheckpoints periodically)."""
+    """A long chunk stream keeps its state bounded: every 16th part of a
+    table, the store checkpoints the resolved table into one part, so a
+    read unions at most 16 chunk frames."""
     recs = [{"users": [{"id": f"u{i}", "v": i}]} for i in range(40)]
     pipe = (
         stream(
@@ -1111,3 +1112,98 @@ def test_empty_sequential_chunk(spark):
         )
         want = [] if chunks == [[]] else [(1, 2)]
         assert sorted(map(tuple, res["users"].collect())) == want, chunks
+
+
+def _users_stream(spark, recs, strategy):
+    """The final ``users(id, v)`` table of a one-record-per-chunk stream."""
+    return (
+        stream(OneRecordPerChunkSource(recs), spark=spark, flush_strategy=strategy)
+        .goto("users")
+        .each()
+        .map_to(
+            "users",
+            fields=[Field("id", get("id")), Field("v", get("v"))],
+            join_on=["id"],
+        )
+        .run()["users"]
+    )
+
+
+@pytest.mark.parametrize(
+    "strategy,want",
+    [
+        (UpsertFlushStrategy("update"), [(1, "c"), ("b", "b")]),
+        (UpsertFlushStrategy("skip"), [(1, "a"), ("b", "b")]),
+        (None, [(1, "a"), (1, "c"), ("b", "b")]),
+    ],
+    ids=["update", "skip", "append"],
+)
+def test_key_type_differs_between_chunks(spark, strategy, want):
+    """A key read as VARIANT in one chunk (its documents mix strings and
+    numbers) and as BIGINT in the next resolves on one key: the store
+    casts the BIGINT part to VARIANT and groups on the JSON form."""
+    recs = [
+        {"users": [{"id": 1, "v": "a"}, {"id": "b", "v": "b"}]},
+        {"users": [{"id": 1, "v": "c"}]},
+    ]
+    rows = [
+        (r["id"].toPython(), r["v"])
+        for r in _users_stream(spark, recs, strategy).collect()
+    ]
+    assert sorted(rows, key=repr) == sorted(want, key=repr)
+
+
+def test_buffered_key_strategy_reused_across_runs(spark):
+    """The LRU belongs to the run's store: a second run of the same
+    strategy instance starts cold instead of treating the first run's
+    keys as cached rows it does not have."""
+    from etielle_spark.streaming import BufferedKeyFlushStrategy
+
+    recs = [{"users": [{"id": "u1", "v": 1}]}, {"users": [{"id": "u2", "v": 2}]}]
+    strategy = BufferedKeyFlushStrategy()
+    for _ in range(2):
+        rows = sorted(tuple(r) for r in _users_stream(spark, recs, strategy).collect())
+        assert rows == [("u1", 1), ("u2", 2)]
+
+
+def test_buffered_key_merges_only_the_cached_generation(spark):
+    """max_keys=1: u2 evicts u1, so u1=3 starts a new row; u1=4 merges
+    onto that row only, and the first u1 row keeps its value."""
+    from etielle_spark.streaming import BufferedKeyFlushStrategy
+
+    writes = [("u1", 1), ("u2", 2), ("u1", 3), ("u1", 4)]
+    recs = [{"users": [{"id": k, "v": v}]} for k, v in writes]
+    users = _users_stream(spark, recs, BufferedKeyFlushStrategy(max_keys=1))
+    assert sorted(tuple(r) for r in users.collect()) == [
+        ("u1", 1),
+        ("u1", 4),
+        ("u2", 2),
+    ]
+
+
+def _plan_depth(df) -> int:
+    def depth(node):
+        it = node.children().iterator()
+        d = 0
+        while it.hasNext():
+            d = max(d, depth(it.next()))
+        return d + 1
+
+    return depth(df._jdf.queryExecution().optimizedPlan())
+
+
+def test_upsert_state_plan_depth_is_constant(spark):
+    """An upsert stream's final table is one aggregate over a union of
+    the chunk frames: its optimized plan is as deep after 12 chunks as
+    after 4, and has no anti join."""
+
+    def final(n):
+        recs = [{"users": [{"id": f"u{i % 3}", "v": i}]} for i in range(n)]
+        return _users_stream(spark, recs, UpsertFlushStrategy("update"))
+
+    four, twelve = final(4), final(12)
+    assert _plan_depth(four) == _plan_depth(twelve)
+    plan = twelve._jdf.queryExecution().optimizedPlan().toString()
+    assert "LeftAnti" not in plan
+    rows = sorted(tuple(r) for r in twelve.collect())
+    assert rows == [("u0", 9), ("u1", 10), ("u2", 11)]
