@@ -121,11 +121,7 @@ def _plain_py(v: Any) -> Any:
     the __empty__ marker column-side, see core.strip_marker_fields)."""
     from pyspark.sql import Row
 
-    try:
-        from pyspark.sql.types import VariantVal
-    except ImportError:  # pragma: no cover
-        VariantVal = None
-    if VariantVal is not None and isinstance(v, VariantVal):
+    if isinstance(v, T.VariantVal):
         return _plain_py(v.toPython())
     if isinstance(v, Row):
         return {
@@ -1994,11 +1990,7 @@ def _assemble_table(
                 src = qcol(fld.name)
                 # try_cast keeps collect-mode semantics under ANSI sessions
                 # (plain cast would throw on the first bad value)
-                tgt = (
-                    src.try_cast(fld.dataType)
-                    if hasattr(src, "try_cast")
-                    else src.cast(fld.dataType)
-                )
+                tgt = src.try_cast(fld.dataType)
                 bad = src.isNotNull() & tgt.isNull()
                 checks.append(
                     F.when(
@@ -2067,20 +2059,11 @@ def _assemble_table(
             # the __errs drop and every declared cast in ONE select
             # (the old per-field withColumn loop paid one plan
             # re-analysis per cast field)
-            def _cast_or_keep(name: str) -> Column:
-                if name not in casts:
-                    return qcol(name)
-                c = qcol(name)
-                casted = (
-                    c.try_cast(schema[name].dataType)
-                    if hasattr(c, "try_cast")
-                    else c.cast(schema[name].dataType)
-                )
-                return casted.alias(name)
-
-            out = with_errs.filter(F.size("__errs") == 0).select(
-                *[_cast_or_keep(c) for c in with_errs.columns if c != "__errs"]
-            )
+            out = with_errs.filter(F.size("__errs") == 0).select(*[
+                casts[c].alias(c) if c in casts else qcol(c)
+                for c in with_errs.columns
+                if c != "__errs"
+            ])
 
     return out, public_pairs, err_df
 
@@ -2117,9 +2100,11 @@ _INT_KINDS = ("BIGINT", "INT", "SMALLINT", "TINYINT")
 def _key_canon(col: Column, dtype) -> Column:
     """Kind-preserving canonical string for a join/lookup key: Python
     equality semantics — numbers match across representations (7 == 7.0
-    == True) but never match strings ('7' != 7).  Used when a key column
-    is variant-typed (string/number-mixed field); the plain-typed other
-    side canonicalizes the same way so the equi-join lines up."""
+    == True) but never match strings ('7' != 7).  It is the rule for
+    every mixed-type key match, not only VARIANT keys: where
+    ``_plain_keys`` does not hold, both sides canonicalize so the
+    equi-join lines up (links, backlinks, ``bind_many_to_one``, the
+    orphan probes, and the stream store's VARIANT keys)."""
     if isinstance(dtype, T.VariantType):
         kind = F.schema_of_variant(col)
         is_num = kind.isin(*_NUM_KINDS) | kind.startswith("DECIMAL")
@@ -2153,6 +2138,78 @@ def _key_canon(col: Column, dtype) -> Column:
     return F.concat(F.lit("s:"), col.cast("string"))
 
 
+def _plain_keys(a: T.DataType, b: T.DataType) -> bool:
+    """The one rule for when two key columns match: plain equality when
+    their dtypes are equal (VARIANT aside: it has no equality) or both
+    are integral; otherwise ``_key_canon`` of both sides, so a key never
+    matches across the string/number boundary and 2**53 + 1 never
+    matches 2.0**53 (Python dict semantics)."""
+    if isinstance(a, T.IntegralType) and isinstance(b, T.IntegralType):
+        return True
+    return a == b and not isinstance(a, T.VariantType)
+
+
+def _key_join(
+    child: DataFrame, parent: DataFrame, pairs: Sequence[tuple[str, str]]
+) -> tuple[list[Column], Column]:
+    """The parent's key columns (``__lk_pf``, ``__lk_pf1``, ...) and the
+    child's join condition on them, each (child, parent) pair by the key
+    rule; plain pairs build from memoized SQL text."""
+    keys, on = [], None
+    for i, (cf, pf) in enumerate(pairs):
+        lk = f"__lk_pf{i or ''}"
+        cf_t, pf_t = child.schema[cf].dataType, parent.schema[pf].dataType
+        if _plain_keys(cf_t, pf_t):
+            keys.append(cexpr(f"{bq(pf)} AS {lk}"))
+            eq = cexpr(f"{bq(cf)} = {lk}")
+        else:
+            keys.append(_key_canon(qcol(pf), pf_t).alias(lk))
+            eq = _key_canon(qcol(cf), cf_t) == F.col(lk)
+        on = eq if on is None else on & eq
+    return keys, on
+
+
+def _orphans(
+    child: DataFrame, parent: DataFrame, pairs: Sequence[tuple[str, str]]
+) -> DataFrame:
+    """The child rows whose key parts are all non-NULL and that have no
+    parent: a left_anti against the parent's distinct keys (broadcast).
+    A child with a NULL key part is never an orphan — Python skips a
+    ``None`` key."""
+    keys, on = _key_join(child, parent, pairs)
+    notnull = " AND ".join(f"{bq(cf)} IS NOT NULL" for cf, _ in pairs)
+    return child.filter(notnull).join(
+        F.broadcast(parent.select(*keys).dropDuplicates()), on, "left_anti"
+    )
+
+
+def _bind(
+    child: DataFrame,
+    parent: DataFrame,
+    pairs: Sequence[tuple[str, str]],
+    fk: str,
+    fk_src: str,
+    order: str,
+) -> DataFrame:
+    """``child`` plus ``fk``: the ``fk_src`` of the parent whose key
+    matches, NULL if none.  Parents sharing a key resolve to the greatest
+    ``order`` — the LAST arrival (the reference's secondary index
+    overwrites in arrival order, relationships.py:461-538).  The parent
+    side is a (key, fk) index, broadcast into a left join."""
+    keys, on = _key_join(child, parent, pairs)
+    lks = [f"__lk_pf{i or ''}" for i in range(len(pairs))]
+    index = (
+        parent.select(
+            *keys,
+            cexpr(f"{bq(fk_src)} AS {bq(fk)}"),
+            cexpr(f"{bq(order)} AS __lk_seq"),
+        )
+        .groupBy(*lks)
+        .agg(cexpr(f"max_by({bq(fk)}, __lk_seq) AS {bq(fk)}"))
+    )
+    return child.join(F.broadcast(index), on, "left").drop(*lks)
+
+
 def _apply_links(
     links: list[LinkSpec],
     internal: dict[str, DataFrame],
@@ -2161,7 +2218,7 @@ def _apply_links(
     errors: dict[str, DataFrame],
     extra_parents: Optional[dict[str, DataFrame]] = None,
 ):
-    """link_to -> left equi join for FK population; required -> anti-join
+    """link_to -> ``_bind`` for FK population; required -> ``_orphans``
     errors (etielle/relationships.py:14-152,461-538).  Also returns each
     applied link's unbuilt ``_orphans`` probe, keyed by ``id(spec)``."""
     extra_parents = extra_parents or {}
@@ -2192,39 +2249,11 @@ def _apply_links(
         (cf, pf), *rest = spec.by.items()
         if rest:
             raise ValueError("link_to: composite `by` not supported (reference limits to one pair)")
-
-        # string/number-mixed (variant) key on either side: join on the
-        # kind-preserving canonical form (Python equality — 7 matches
-        # 7.0, never '7')
-        cf_t = child_int.schema[cf].dataType
-        pf_t = parent_int.schema[pf].dataType
-        orphans[id(spec)] = partial(_orphans, child_int, cf, cf_t, parent_int, pf, pf_t)
+        orphans[id(spec)] = partial(_orphans, child_int, parent_int, [(cf, pf)])
 
         if spec.fk:
-            if isinstance(cf_t, T.VariantType) or isinstance(pf_t, T.VariantType):
-                ck, pk = _key_canon(qcol(cf), cf_t), _key_canon(qcol(pf), pf_t)
-            else:
-                ck, pk = qcol(cf), qcol(pf)
-            id_internal = dict(ppairs).get("id")
-            fk_src = qcol(id_internal) if id_internal else qcol(pf)
-            # when multiple parents share a by-value the LAST one in
-            # traversal-arrival order wins deterministically (the
-            # reference's secondary index overwrites in arrival order,
-            # relationships.py:461-538) — not an arbitrary dropDuplicates
-            parent_side = (
-                parent_int.select(
-                    pk.alias("__lk_pf"),
-                    fk_src.alias(spec.fk),
-                    F.col(_SEQ).alias("__lk_seq"),
-                )
-                .groupBy("__lk_pf")
-                .agg(F.max_by(qcol(spec.fk), F.col("__lk_seq")).alias(spec.fk))
-            )
-            joined = child_int.join(
-                F.broadcast(parent_side),
-                ck == parent_side["__lk_pf"],
-                "left",
-            ).drop("__lk_pf")
+            fk_src = dict(ppairs).get("id") or pf
+            joined = _bind(child_int, parent_int, [(cf, pf)], spec.fk, fk_src, _SEQ)
             internal[spec.child] = joined
             pairs = public_map[spec.child]
             if spec.fk not in [p for p, _ in pairs]:
@@ -2246,25 +2275,6 @@ def _apply_links(
             else:
                 errors[spec.child] = missing
     return internal, public, errors, orphans
-
-
-def _orphans(
-    child: DataFrame, cf: str, cf_t: T.DataType, parent: DataFrame, pf: str, pf_t: T.DataType
-) -> DataFrame:
-    """The child rows whose non-null key ``cf`` has no parent row with
-    that ``pf`` value: a left_anti against the parent's distinct keys.  A
-    string/number-mixed (variant) key on either side joins on the
-    ``_key_canon`` form; plain keys build from memoized SQL text."""
-    if isinstance(cf_t, T.VariantType) or isinstance(pf_t, T.VariantType):
-        pk = _key_canon(qcol(pf), pf_t).alias("__lk_pf")
-        on = _key_canon(qcol(cf), cf_t) == F.col("__lk_pf")
-    else:
-        pk = cexpr(f"{bq(pf)} AS __lk_pf")
-        on = cexpr(f"{bq(cf)} = __lk_pf")
-    parent_keys = parent.select(pk).dropDuplicates()
-    return child.filter(f"{bq(cf)} IS NOT NULL").join(
-        F.broadcast(parent_keys), on, "left_anti"
-    )
 
 
 def _apply_backlinks(
@@ -2318,51 +2328,32 @@ def _apply_backlinks(
                 )
             rid_cols = [_SEQ]
         child_struct = F.struct(*[qcol(i).alias(pub) for pub, i in cpairs])
-        # string/number-mixed (variant) ids on either side: match on the
-        # kind-preserving canonical form (Python equality — 7 pairs with
-        # 7.0, never '7')
-        cf_t = child_int.schema[cf].dataType
-        plf_t = parent_int.schema[plf].dataType
-        el_t = plf_t.elementType if isinstance(plf_t, T.ArrayType) else None
-        variant_ids = isinstance(cf_t, T.VariantType) or isinstance(
-            el_t, T.VariantType
-        )
-        child_key = (
-            _key_canon(qcol(cf), cf_t) if variant_ids else qcol(cf)
-        )
-        child_side = child_int.select(
-            child_key.alias("__bl_cid"), child_struct.alias("__bl_child")
-        )
         exploded = parent_int.select(
             *[qcol(c).alias(f"__bl_k_{i}") for i, c in enumerate(rid_cols)],
             F.posexplode(qcol(plf)).alias("__bl_pos", "__bl_id"),
         )
-        if variant_ids:
-            exploded = exploded.withColumn(
-                "__bl_id",
-                _key_canon(
-                    F.col("__bl_id"),
-                    exploded.schema["__bl_id"].dataType,
-                ),
-            )
         if spec.fail_on_missing:
-            orphan = (
-                exploded.filter(F.col("__bl_id").isNotNull())
-                .join(
-                    child_side.select(F.col("__bl_cid").alias("__bl_id")).dropDuplicates(),
-                    "__bl_id",
-                    "left_anti",
-                )
-                .limit(3)
-                .collect()
-            )
+            orphan = _orphans(exploded, child_int, [("__bl_id", cf)]).limit(3).collect()
             if orphan:
-                missing = [r["__bl_id"] for r in orphan]
+                missing = [_plain_py(r["__bl_id"]) for r in orphan]
                 raise ValueError(
                     f"backlink('{spec.parent}'->'{spec.child}'): missing child "
                     f"ids {missing} (fail_on_missing=True; reference "
                     "relationships.py:434-441)"
                 )
+        # the id join by the key rule (Python equality — 7 pairs with
+        # 7.0, never '7')
+        cf_t = child_int.schema[cf].dataType
+        id_t = parent_int.schema[plf].dataType.elementType
+        child_key = qcol(cf)
+        if not _plain_keys(id_t, cf_t):
+            child_key = _key_canon(child_key, cf_t)
+            exploded = exploded.withColumn(
+                "__bl_id", _key_canon(F.col("__bl_id"), id_t)
+            )
+        child_side = child_int.select(
+            child_key.alias("__bl_cid"), child_struct.alias("__bl_child")
+        )
         # both sides are corpus-scale (the exploded id list is |parents| x
         # list-length; the child table is the corpus), so a STATIC
         # broadcast is never the right physical plan — Catalyst's size

@@ -6,13 +6,16 @@ composite logical keys computed per traversal context; inside the fluent
 engine this is ``link_to``.  This module exposes the same surface for
 plain DataFrames — the shape a power user needs when the child and
 parent tables already exist as frames (e.g. produced by two separate
-pipelines) and only the FK binding is left.
+pipelines) and only the FK binding is left.  It shares one engine with
+``link_to`` (``fluent._bind`` and ``fluent._orphans``), so two keys
+match by one rule: Python's, ``7 == 7.0`` and ``7 != "7"``.
 
 Semantics mirror the reference:
 
 - the parent side deduplicates by key with LAST-arrival-wins when an
   ``order_col`` is given (the reference's secondary index overwrites in
   arrival order), else any-deterministic ``max_by`` on the fk itself;
+- a child with a NULL key part is skipped (a NULL fk, never an error);
 - ``required=True`` surfaces unmatched children as an errors frame
   (reference raises per-key binding errors; a distributed engine
   collects them);
@@ -20,9 +23,7 @@ Semantics mirror the reference:
   ``RelationshipIncompleteError`` when required parents are missing —
   the streaming chunk-completeness check, usable on any frame pair.
 
-Scale shape: one equi-join; the parent key table is projected to
-(key, fk) before joining so the join payload is narrow, and AQE
-broadcasts it when small.
+Scale shape: one equi-join against a broadcast (key, fk) index.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from .colcache import bq, qcol
+from .fluent import _bind, _orphans
 from .streaming.chunks import RelationshipIncompleteError
 
 __all__ = [
@@ -91,18 +93,6 @@ def compute_relationship_keys(
     )
 
 
-def _parent_index(parent: DataFrame, spec: ManyToOneSpec, order_col: Optional[str]) -> DataFrame:
-    fk = spec.parent_fk or spec.parent_keys[0]
-    if order_col is not None:
-        agg = F.max_by(qcol(fk), qcol(order_col))
-    else:
-        agg = F.max_by(qcol(fk), qcol(fk))
-    return (
-        parent.groupBy(*[qcol(k) for k in spec.parent_keys])
-        .agg(agg.alias(spec.attr))
-    )
-
-
 def bind_many_to_one(
     child: DataFrame,
     parent: DataFrame,
@@ -115,22 +105,21 @@ def bind_many_to_one(
     Returns ``(bound, errors)``: ``bound`` is the child frame plus the
     ``spec.attr`` FK column; ``errors`` holds the children whose parent
     key found no match (empty frame when ``required=False`` — those
-    children keep a NULL fk instead).  Duplicate parent keys resolve
+    children keep a NULL fk instead).  A child with a NULL key part is
+    bound with a NULL fk, never an error.  Duplicate parent keys resolve
     last-wins by ``order_col`` when given (reference arrival-order
     overwrite), else deterministically by the fk value.
     """
-    idx = _parent_index(parent, spec, order_col)
-    cond = None
-    for c, p in zip(spec.child_keys, spec.parent_keys):
-        eq = child[bq(c)] == idx[bq(p)]
-        cond = eq if cond is None else cond & eq
-    joined = child.join(idx, cond, "left").select(
-        *[child[bq(c)] for c in child.columns], idx[bq(spec.attr)]
-    )
+    pairs = list(zip(spec.child_keys, spec.parent_keys))
+    fk = spec.parent_fk or spec.parent_keys[0]
+    bound = _bind(child, parent, pairs, spec.attr, fk, order_col or fk)
     if not spec.required:
-        return joined, joined.filter(F.lit(False))
-    errors = joined.filter(qcol(spec.attr).isNull()).drop(spec.attr)
-    return joined.filter(qcol(spec.attr).isNotNull()), errors
+        return bound, bound.filter(F.lit(False))
+    errors = _orphans(child, parent, pairs)
+    # every other child: a NULL key part, or a key some parent has
+    keyless = " OR ".join(f"{bq(c)} IS NULL" for c in spec.child_keys)
+    same = [(c, c) for c in spec.child_keys]
+    return bound.filter(keyless).unionByName(_orphans(bound, errors, same)), errors
 
 
 def validate_relationship_completeness(
@@ -142,16 +131,13 @@ def validate_relationship_completeness(
 ) -> None:
     """Raise :class:`RelationshipIncompleteError` when a required
     relationship has children whose parents are absent (reference
-    relationships.py:545-616); no-op otherwise.  One anti-join."""
+    relationships.py:545-616); no-op otherwise.  One anti-join; a child
+    with a NULL key part has no parent to miss."""
     if not spec.required:
         return
-    probe = compute_relationship_keys(child, spec).dropDuplicates()
-    missing = probe.join(
-        parent.select(*[qcol(k) for k in spec.parent_keys]).dropDuplicates(),
-        list(spec.parent_keys),
-        "left_anti",
-    )
-    examples = [tuple(r) for r in missing.limit(max_examples).collect()]
+    missing = _orphans(child, parent, list(zip(spec.child_keys, spec.parent_keys)))
+    keys = missing.select(*[qcol(c) for c in spec.child_keys]).limit(max_examples)
+    examples = [tuple(r) for r in keys.collect()]
     if examples:
         raise RelationshipIncompleteError(
             f"{spec.child_table}->{spec.parent_table}: "

@@ -107,8 +107,15 @@ def populate_child_fk(
     required: bool = False,
 ) -> DataFrame:
     """Phase 2: children pick up the parent's generated id via a
-    natural-key equi join (broadcast — parents of one batch are small
-    relative to fact children)."""
+    natural-key equi join (``fluent._bind``: the parents become a
+    broadcast (key, id) index — parents of one batch are small relative
+    to fact children).  A natural key written more than once resolves to
+    its greatest generated id, so the result does not depend on the
+    read-back order.  A child with a NULL key keeps a NULL fk and is
+    never missing; ``required=True`` raises on the others
+    (``fluent._orphans``)."""
+    from ..fluent import _bind, _orphans
+
     (cf, pf), *rest = by.items()
     if rest:
         raise ValueError("populate_child_fk: single natural-key pair only")
@@ -119,21 +126,17 @@ def populate_child_fk(
     # NULL with required=False
     child_key_type = dict(child_df.dtypes)[cf]
     parent_side = written_parents.select(
-        F.col(pf).cast(child_key_type).alias("__tp_key"),
-        F.col(gen_col).alias(fk_col),
-    ).dropDuplicates(["__tp_key"])
-    out = child_df.join(
-        F.broadcast(parent_side), child_df[cf] == parent_side["__tp_key"], "left"
-    ).drop("__tp_key")
+        F.col(pf).cast(child_key_type).alias("__tp_key"), F.col(gen_col)
+    )
+    pairs = [(cf, "__tp_key")]
     if required:
-        missing = out.filter(F.col(cf).isNotNull() & F.col(fk_col).isNull()).limit(3)
-        rows = missing.collect()
+        rows = _orphans(child_df, parent_side, pairs).limit(3).collect()
         if rows:
             raise RuntimeError(
                 f"two-phase FK: children reference unwritten parents: "
                 f"{[r[cf] for r in rows]}"
             )
-    return out
+    return _bind(child_df, parent_side, pairs, fk_col, gen_col, gen_col)
 
 
 def supabase_two_phase_insert(

@@ -30,12 +30,20 @@ from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..colcache import bq, cexpr
-from ..fluent import PipelineBuilder, PipelineResult, _Docs
+from ..colcache import bq, cexpr, qcol
+from ..fluent import PipelineBuilder, PipelineResult, _Docs, _key_canon, _project_to
 from .chunks import Chunk, ChunkSource, RelationshipIncompleteError
 
 # a table's 16th part checkpoints its resolved frame into one part
 _PARTS_PER_CHECKPOINT = 16
+
+
+def _json_kind(t: T.DataType) -> Optional[str]:
+    """A column type's JSON kind: numbers and bools are one, as in Python;
+    VOID (all NULL) has none; any other type is its own."""
+    if isinstance(t, (T.NumericType, T.BooleanType)):
+        return "number"
+    return None if isinstance(t, T.NullType) else t.typeName()
 
 
 class TableStore:
@@ -45,8 +53,10 @@ class TableStore:
     ordinal (``writes`` is the next one).  Reading a table unions its
     parts; a table added with ``keys`` keeps one row per key, each column
     ``max_by(column, order)`` with ``order`` SQL text over ``__chunk``
-    (``{c}`` is the column).  A column VARIANT in any part is cast to
-    VARIANT in all, and a VARIANT key groups on its JSON form.  ``put``
+    (``{c}`` is the column).  A column VARIANT in any part, or whose JSON
+    kind differs between parts, is VARIANT in all (as in a batch run), so
+    ``"1"`` and ``1`` stay two keys; a VARIANT key groups on
+    ``_key_canon``.  ``put``
     keeps a finished frame (eager dimensions); ``lru`` is the per-run key
     cache of ``BufferedKeyFlushStrategy``."""
 
@@ -71,11 +81,15 @@ class TableStore:
 
     def _resolve(self, name: str) -> DataFrame:
         parts = self._parts[name]
-        var = {f.name for p in parts for f in p.schema if f.dataType == T.VariantType()}
-        cols = list(dict.fromkeys(c for p in parts for c in p.columns))
+        kinds: dict[str, set] = {}
+        for p in parts:
+            for f in p.schema:
+                kinds.setdefault(f.name, set()).add(_json_kind(f.dataType))
+        var = {c for c, ks in kinds.items() if "variant" in ks or len(ks - {None}) > 1}
+        cols = list(kinds)
         if var:
             parts = [p.select(*[
-                cexpr(f"CAST({bq(f.name)} AS VARIANT) AS {bq(f.name)}")
+                _project_to(qcol(f.name), f.dataType, T.VariantType()).alias(f.name)
                 if f.name in var and f.dataType != T.VariantType()
                 else bq(f.name)
                 for f in p.schema
@@ -84,15 +98,13 @@ class TableStore:
         if name not in self._fold:
             return df
         keys, order = self._fold[name]
-        kc = {k: bq("__kc_" + k) for k in keys if k in var}
         return df.groupBy(*[
-            cexpr(f"to_json({bq(k)}) AS {kc[k]}") if k in kc else bq(k) for k in keys
+            _key_canon(qcol(k), T.VariantType()).alias("__kc_" + k) if k in var else bq(k)
+            for k in keys
         ]).agg(*[
             cexpr(f"max_by({bq(c)}, {order.replace('{c}', bq(c))}) AS {bq(c)}")
-            for c in cols if c not in keys
-        ]).select(*[
-            cexpr(f"parse_json({kc[c]}) AS {bq(c)}") if c in kc else bq(c) for c in cols
-        ])
+            for c in cols if c not in keys or c in var
+        ]).select(*[bq(c) for c in cols])
 
     @property
     def tables(self) -> dict[str, DataFrame]:

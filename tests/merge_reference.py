@@ -102,3 +102,22 @@ def reference_flush(chunks, strategy, max_keys=None):
             while len(lru) > max_keys:
                 del lru[next(iter(lru))]
     return list(out.values())
+
+
+def reference_bind(children, parents, pairs):
+    """Pure-Python dict bind (reference relationships.py:100-152,
+    461-538): index the parents by their key tuple, the LAST one in
+    arrival order winning, then look each child's key up.  ``pairs``:
+    ``(child_field, parent_field)``.  Keys compare as Python values
+    (``7 == 7.0``, ``7 != "7"``); a child with a None key part is skipped.
+    Returns ``(bound, orphans)``: per child, its parent dict or None;
+    and the children with no None key part and no parent."""
+    index = {tuple(p[pf] for _, pf in pairs): p for p in parents}
+    bound, orphans = [], []
+    for c in children:
+        key = tuple(c[cf] for cf, _ in pairs)
+        parent = None if None in key else index.get(key)
+        bound.append(parent)
+        if parent is None and None not in key:
+            orphans.append(c)
+    return bound, orphans

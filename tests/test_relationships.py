@@ -667,3 +667,177 @@ def test_key_canon_int_float_still_match(spark):
     )
     got = {r["t"]: r["parent_name"] for r in result.rows("ch")}
     assert got == {"c-int": "P-float"}
+
+
+def test_backlink_cache_released_even_when_sink_fails(spark):
+    """A failing sink must not leak the backlink-parent cache (the
+    unpersist runs in a finally)."""
+    from etielle_spark import Field, TempField, etl, get
+    from etielle_spark.sources.sinks import Sink
+
+    class BoomSink(Sink):
+        def write(self, table, df):
+            df.count()  # materialize (fills the parent cache)...
+            raise RuntimeError("sink down")
+
+    data = {
+        "qs": [{"qid": "q1", "cids": [1]}],
+        "cs": [{"cid": 1, "t": "a"}],
+    }
+    base = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="sink down"):
+        (
+            etl(data, spark=spark)
+            .goto("qs").each()
+            .map_to("q", fields=[Field("qid", get("qid")),
+                                 TempField("cids", get("cids"))], join_on=["qid"])
+            .goto_root()
+            .goto("cs").each()
+            .map_to("c", fields=[Field("t", get("t")),
+                                 TempField("cid", get("cid"))], join_on=["t"])
+            .backlink("q", "c", "children", by={"cids": "cid"})
+            .load(BoomSink())
+            .run()
+        )
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() <= base
+
+def test_sinkless_backlink_release(spark):
+    """Sink-less runs hand their backlink-parent caches to the result;
+    release() (or the context manager) frees them deterministically."""
+    from pyspark import StorageLevel
+
+    from etielle_spark import Field, TempField, etl, get
+
+    data = {
+        "qs": [{"qid": 1, "cids": [10, 11]}, {"qid": 2, "cids": [11]}],
+        "cs": [{"cid": 10, "t": "a"}, {"cid": 11, "t": "b"}],
+    }
+
+    def build():
+        return (
+            etl(data, spark=spark)
+            .goto("qs").each()
+            .map_to("q", fields=[Field("qid", get("qid")),
+                                 TempField("cids", get("cids"))],
+                    join_on=["qid"])
+            .goto_root()
+            .goto("cs").each()
+            .map_to("c", fields=[Field("t", get("t")),
+                                 TempField("cid", get("cid"))],
+                    join_on=["t"])
+            .backlink("q", "c", "children", by={"cids": "cid"})
+            .run()
+        )
+
+    res = build()
+    assert res._persisted, "sink-less backlink run should own parent caches"
+    cached = res._persisted[0]
+    assert cached.storageLevel != StorageLevel.NONE
+    rows = {d["qid"]: [c["t"] for c in d["children"]] for d in res.rows("q")}
+    assert rows == {1: ["a", "b"], 2: ["b"]}
+    res.release()
+    assert cached.storageLevel == StorageLevel.NONE
+    res.release()  # idempotent
+
+    # context-manager form
+    with build() as res2:
+        pinned = list(res2._persisted)
+        assert pinned and pinned[0].storageLevel != StorageLevel.NONE
+    assert all(f.storageLevel == StorageLevel.NONE for f in pinned)
+
+
+# -- one key rule for every relationship API -------------------------------
+
+# (parents, children) per probe shape; parents arrive in list order
+_BIND_SHAPES = {
+    # the child key reads BIGINT, the parent key STRING: 7 != "7"
+    "int_vs_str": ([{"k": "7"}], [{"pk": 7}]),
+    # a string sibling makes the child key VARIANT; 7 still != "7"
+    "variant_vs_str": ([{"k": "7"}, {"k": "x"}], [{"pk": 7}, {"pk": "x"}]),
+    # BIGINT 2**53 + 1 != DOUBLE 2.0**53, while 2**53 == 2.0**53
+    "2_53_neighbours": ([{"k": 2.0**53}], [{"pk": 2**53 + 1}, {"pk": 2**53}]),
+    # a NULL child key is skipped: no fk, and never an orphan
+    "null_child_key": ([{"k": 1}], [{"pk": 1}, {"pk": None}]),
+    # parents sharing a key: the last one wins
+    "dup_parent_key": ([{"k": 1}, {"k": 1}], [{"pk": 1}]),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_BIND_SHAPES))
+def test_bind_apis_match_reference_bind(spark, shape):
+    """link_to, backlink, bind_many_to_one and
+    validate_relationship_completeness decide "does this child key match
+    that parent key" by one rule, Python's: each agrees with the
+    pure-Python dict bind on every probe shape."""
+    from merge_reference import reference_bind
+
+    from etielle_spark import ManyToOneSpec, bind_many_to_one
+    from etielle_spark.fluent import _plain_py
+    from etielle_spark.relationships import (
+        RelationshipIncompleteError,
+        validate_relationship_completeness,
+    )
+
+    shape_parents, shape_children = _BIND_SHAPES[shape]
+    # parent ids 10.., child ids 1..; each parent lists its own key as
+    # the backlink id list
+    parents = [
+        dict(p, id=10 + i, seq=i, kids=[p["k"]]) for i, p in enumerate(shape_parents)
+    ]
+    children = [dict(c, id=1 + i) for i, c in enumerate(shape_children)]
+    bound, orphans = reference_bind(children, parents, [("pk", "k")])
+    want_fk = {c["id"]: p and p["id"] for c, p in zip(children, bound)}
+    want_kids, kid_orphans = {}, []
+    for p in parents:
+        got, missing = reference_bind([{"v": v} for v in p["kids"]], children, [("v", "pk")])
+        want_kids[p["id"]] = [c["id"] for c in got if c]
+        kid_orphans += missing
+
+    def build(pk_field=Field):
+        return (
+            etl({"parents": parents, "children": children}, spark=spark)
+            .goto("parents").each()
+            .map_to("parents", fields=[
+                Field("id", get("id")), Field("k", get("k")),
+                Field("seq", get("seq")), TempField("kids", get("kids")),
+            ], join_on=["id"])
+            .goto_root()
+            .goto("children").each()
+            .map_to("children", fields=[Field("id", get("id")), pk_field("pk", get("pk"))],
+                    join_on=["id"])
+        )
+
+    # link_to: fk and required errors
+    res = build().link_to("parents", by={"pk": "k"}, fk="parent_id", required=True).run()
+    assert {r["id"]: r["parent_id"] for r in res.rows("children")} == want_fk
+    assert res.errors["children"].count() == len(orphans)
+    # backlink: the collected children, and fail_on_missing (the key is
+    # a TempField: a collected row cannot hold a VARIANT column)
+    res = build(TempField).backlink("parents", "children", "kid_rows", by={"kids": "pk"}).run()
+    got_kids = {r["id"]: [c["id"] for c in r["kid_rows"]] for r in res.rows("parents")}
+    assert got_kids == want_kids
+    strict = build(TempField).backlink(
+        "parents", "children", "kid_rows", by={"kids": "pk"}, fail_on_missing=True
+    )
+    if kid_orphans:
+        with pytest.raises(ValueError, match="missing child ids"):
+            strict.run()
+    else:
+        strict.run()
+
+    # the core API on the same typed frames
+    plain = build().run()
+    child_df, parent_df = plain["children"], plain["parents"]
+    spec = ManyToOneSpec("children", "parents", "parent_id", ["pk"], ["k"], parent_fk="id")
+    b, errors = bind_many_to_one(child_df, parent_df, spec, order_col="seq")
+    assert {r["id"]: r["parent_id"] for r in b.collect()} == {
+        i: fk for i, fk in want_fk.items() if i not in {c["id"] for c in orphans}
+    }
+    assert sorted(r["id"] for r in errors.collect()) == sorted(c["id"] for c in orphans)
+    assert {_plain_py(r["pk"]) for r in errors.collect()} == {c["pk"] for c in orphans}
+    if orphans:
+        with pytest.raises(RelationshipIncompleteError) as ei:
+            validate_relationship_completeness(child_df, parent_df, spec)
+        assert str(len(orphans)) + "+ missing" in str(ei.value)
+    else:
+        validate_relationship_completeness(child_df, parent_df, spec)

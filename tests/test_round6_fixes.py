@@ -423,29 +423,6 @@ def test_incremental_drift_replay_idempotent(spark, tmp_path):
     assert sorted(map(tuple, psi.psi().collect())) == first
 
 
-def test_supabase_two_phase_all_null_column(spark):
-    """A nullable parent column that is None in EVERY row must not crash
-    phase 2's DataFrame lift (schema inference would)."""
-    from etielle_spark.sources.supabase import fake_client
-    from etielle_spark.sources.twophase import supabase_two_phase_insert
-
-    client = fake_client(generate_id="id")
-    users = spark.createDataFrame(
-        [("a@x", None), ("b@x", None)], "email string, bio string"
-    )
-    posts = spark.createDataFrame(
-        [("a@x", "t1"), ("b@x", "t2")], "user_email string, title string"
-    )
-    _, n_p, n_c = supabase_two_phase_insert(
-        client, "users", users, "posts", posts,
-        by={"user_email": "email"}, fk_col="user_id",
-    )
-    assert (n_p, n_c) == (2, 2)
-    uid = {r["email"]: r["id"] for r in client.rows["users"]}
-    got = {(r["title"], r["user_id"]) for r in client.rows["posts"]}
-    assert got == {("t1", uid["a@x"]), ("t2", uid["b@x"])}
-
-
 def test_supabase_batch_size_validation(spark):
     from etielle_spark.sources.supabase import (
         SupabaseSink,
@@ -458,39 +435,6 @@ def test_supabase_batch_size_validation(spark):
         insert_batches(client, "t", [{"a": 1}], batch_size=0)
     with pytest.raises(ValueError, match="batch_size"):
         SupabaseSink(client, batch_size=-3)
-
-
-def test_backlink_cache_released_even_when_sink_fails(spark):
-    """A failing sink must not leak the backlink-parent cache (the
-    unpersist runs in a finally)."""
-    from etielle_spark import Field, TempField, etl, get
-    from etielle_spark.sources.sinks import Sink
-
-    class BoomSink(Sink):
-        def write(self, table, df):
-            df.count()  # materialize (fills the parent cache)...
-            raise RuntimeError("sink down")
-
-    data = {
-        "qs": [{"qid": "q1", "cids": [1]}],
-        "cs": [{"cid": 1, "t": "a"}],
-    }
-    base = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    with pytest.raises(RuntimeError, match="sink down"):
-        (
-            etl(data, spark=spark)
-            .goto("qs").each()
-            .map_to("q", fields=[Field("qid", get("qid")),
-                                 TempField("cids", get("cids"))], join_on=["qid"])
-            .goto_root()
-            .goto("cs").each()
-            .map_to("c", fields=[Field("t", get("t")),
-                                 TempField("cid", get("cid"))], join_on=["t"])
-            .backlink("q", "c", "children", by={"cids": "cid"})
-            .load(BoomSink())
-            .run()
-        )
-    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() <= base
 
 
 def test_incremental_drift_run_scoped_batch_keys(spark, tmp_path):

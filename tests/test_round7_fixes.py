@@ -170,40 +170,6 @@ def test_index_read_errors_surface(spark, tmp_path):
     assert "PATH_NOT_FOUND" not in str(ei.value)
 
 
-def test_two_phase_fk_non_string_natural_key(spark):
-    """Date natural keys survive the json default=str echo lift: the
-    parent key is cast to the CHILD key's dtype before the FK join, so
-    the equality is exact instead of implicit-cast roulette."""
-    import datetime
-
-    from etielle_spark.sources.supabase import fake_client
-    from etielle_spark.sources.twophase import supabase_two_phase_insert
-
-    client = fake_client(generate_id="id")
-    days = spark.createDataFrame(
-        [(datetime.date(2024, 1, 1), "mon"), (datetime.date(2024, 1, 2), "tue")],
-        "day date, label string",
-    )
-    events = spark.createDataFrame(
-        [(datetime.date(2024, 1, 1), "a"), (datetime.date(2024, 1, 2), "b"),
-         (datetime.date(2024, 1, 2), "c")],
-        "event_day date, name string",
-    )
-    children, n_parents, n_children = supabase_two_phase_insert(
-        client, "days", days, "events", events,
-        by={"event_day": "day"}, fk_col="day_id", required=True,
-    )
-    assert (n_parents, n_children) == (2, 3)
-    did = {str(r["day"]): r["id"] for r in client.rows["days"]}
-    got = {(r["name"], r["day_id"]) for r in client.rows["events"]}
-    assert got == {
-        ("a", did["2024-01-01"]),
-        ("b", did["2024-01-02"]),
-        ("c", did["2024-01-02"]),
-    }
-    assert None not in {fk for _, fk in got}
-
-
 def test_supabase_sink_single_materialization(spark):
     """SupabaseSink.write persists the frame so batch_total and the row
     stream come from ONE plan execution."""
@@ -220,51 +186,6 @@ def test_supabase_sink_single_materialization(spark):
     assert [s[1] for s in seen] == [1, 2, 3]
     assert all(s[2] == 3 for s in seen)  # total_batches consistent
     assert len(client.rows["t"]) == 5
-
-
-def test_sinkless_backlink_release(spark):
-    """Sink-less runs hand their backlink-parent caches to the result;
-    release() (or the context manager) frees them deterministically."""
-    from pyspark import StorageLevel
-
-    from etielle_spark import Field, TempField, etl, get
-
-    data = {
-        "qs": [{"qid": 1, "cids": [10, 11]}, {"qid": 2, "cids": [11]}],
-        "cs": [{"cid": 10, "t": "a"}, {"cid": 11, "t": "b"}],
-    }
-
-    def build():
-        return (
-            etl(data, spark=spark)
-            .goto("qs").each()
-            .map_to("q", fields=[Field("qid", get("qid")),
-                                 TempField("cids", get("cids"))],
-                    join_on=["qid"])
-            .goto_root()
-            .goto("cs").each()
-            .map_to("c", fields=[Field("t", get("t")),
-                                 TempField("cid", get("cid"))],
-                    join_on=["t"])
-            .backlink("q", "c", "children", by={"cids": "cid"})
-            .run()
-        )
-
-    res = build()
-    assert res._persisted, "sink-less backlink run should own parent caches"
-    cached = res._persisted[0]
-    assert cached.storageLevel != StorageLevel.NONE
-    rows = {d["qid"]: [c["t"] for c in d["children"]] for d in res.rows("q")}
-    assert rows == {1: ["a", "b"], 2: ["b"]}
-    res.release()
-    assert cached.storageLevel == StorageLevel.NONE
-    res.release()  # idempotent
-
-    # context-manager form
-    with build() as res2:
-        pinned = list(res2._persisted)
-        assert pinned and pinned[0].storageLevel != StorageLevel.NONE
-    assert all(f.storageLevel == StorageLevel.NONE for f in pinned)
 
 
 def test_checkpoint_token_canonicalization():

@@ -136,6 +136,85 @@ def test_two_phase_fk_write(spark, tmp_path):
         )
 
 
+def test_supabase_two_phase_all_null_column(spark):
+    """A nullable parent column that is None in EVERY row must not crash
+    phase 2's DataFrame lift (schema inference would)."""
+    from etielle_spark.sources.supabase import fake_client
+    from etielle_spark.sources.twophase import supabase_two_phase_insert
+
+    client = fake_client(generate_id="id")
+    users = spark.createDataFrame(
+        [("a@x", None), ("b@x", None)], "email string, bio string"
+    )
+    posts = spark.createDataFrame(
+        [("a@x", "t1"), ("b@x", "t2")], "user_email string, title string"
+    )
+    _, n_p, n_c = supabase_two_phase_insert(
+        client, "users", users, "posts", posts,
+        by={"user_email": "email"}, fk_col="user_id",
+    )
+    assert (n_p, n_c) == (2, 2)
+    uid = {r["email"]: r["id"] for r in client.rows["users"]}
+    got = {(r["title"], r["user_id"]) for r in client.rows["posts"]}
+    assert got == {("t1", uid["a@x"]), ("t2", uid["b@x"])}
+
+
+def test_two_phase_fk_non_string_natural_key(spark):
+    """Date natural keys survive the json default=str echo lift: the
+    parent key is cast to the CHILD key's dtype before the FK join, so
+    the equality is exact instead of implicit-cast roulette."""
+    import datetime
+
+    from etielle_spark.sources.supabase import fake_client
+    from etielle_spark.sources.twophase import supabase_two_phase_insert
+
+    client = fake_client(generate_id="id")
+    days = spark.createDataFrame(
+        [(datetime.date(2024, 1, 1), "mon"), (datetime.date(2024, 1, 2), "tue")],
+        "day date, label string",
+    )
+    events = spark.createDataFrame(
+        [(datetime.date(2024, 1, 1), "a"), (datetime.date(2024, 1, 2), "b"),
+         (datetime.date(2024, 1, 2), "c")],
+        "event_day date, name string",
+    )
+    children, n_parents, n_children = supabase_two_phase_insert(
+        client, "days", days, "events", events,
+        by={"event_day": "day"}, fk_col="day_id", required=True,
+    )
+    assert (n_parents, n_children) == (2, 3)
+    did = {str(r["day"]): r["id"] for r in client.rows["days"]}
+    got = {(r["name"], r["day_id"]) for r in client.rows["events"]}
+    assert got == {
+        ("a", did["2024-01-01"]),
+        ("b", did["2024-01-02"]),
+        ("c", did["2024-01-02"]),
+    }
+    assert None not in {fk for _, fk in got}
+
+
+def test_two_phase_fk_duplicate_natural_key_is_deterministic(spark):
+    """A natural key written twice resolves to its greatest generated id,
+    whatever order the written rows come back in; a NULL child key keeps
+    a NULL fk and is not a missing parent."""
+    from etielle_spark.sources.twophase import populate_child_fk
+
+    children = spark.createDataFrame(
+        [("p1", "alice"), ("p2", "bob"), ("p3", None)], "post string, author string"
+    )
+    for rows in (
+        [("alice", 1), ("alice", 2), ("bob", 3)],
+        [("bob", 3), ("alice", 2), ("alice", 1)],
+    ):
+        written = spark.createDataFrame(rows, "username string, gen_id long")
+        linked = populate_child_fk(
+            children, written, by={"author": "username"}, fk_col="user_id",
+            required=True,
+        )
+        got = {r["post"]: r["user_id"] for r in linked.collect()}
+        assert got == {"p1": 2, "p2": 3, "p3": None}
+
+
 def test_generated_ids_multi_partition_no_global_funnel(spark):
     """Per-partition offset ids: dense 1..N across many partitions, and the
     staging plan contains NO single-partition exchange (the round-1 global

@@ -1141,7 +1141,7 @@ def _users_stream(spark, recs, strategy):
 def test_key_type_differs_between_chunks(spark, strategy, want):
     """A key read as VARIANT in one chunk (its documents mix strings and
     numbers) and as BIGINT in the next resolves on one key: the store
-    casts the BIGINT part to VARIANT and groups on the JSON form."""
+    casts the BIGINT part to VARIANT and groups on ``_key_canon``."""
     recs = [
         {"users": [{"id": 1, "v": "a"}, {"id": "b", "v": "b"}]},
         {"users": [{"id": 1, "v": "c"}]},
@@ -1152,6 +1152,24 @@ def test_key_type_differs_between_chunks(spark, strategy, want):
     ]
     assert sorted(rows, key=repr) == sorted(want, key=repr)
 
+
+
+@pytest.mark.parametrize(
+    "ids,want",
+    [(["1", 1], [("1", "a"), (1, "c")]), ([7, 7.0], [(7, "c")])],
+    ids=["string_then_number", "int_then_float"],
+)
+def test_key_kind_differs_between_chunks(spark, ids, want):
+    """A key read as STRING in one chunk and as BIGINT in the next stays
+    two keys, as in a batch run ("1" != 1): the store casts both parts
+    to VARIANT.  BIGINT beside DOUBLE is one kind, a plain union, so 7
+    and 7.0 stay one key."""
+    from etielle_spark.fluent import _plain_py
+
+    recs = [{"users": [{"id": ids[0], "v": "a"}]}, {"users": [{"id": ids[1], "v": "c"}]}]
+    users = _users_stream(spark, recs, UpsertFlushStrategy("update"))
+    rows = [(_plain_py(r["id"]), r["v"]) for r in users.collect()]
+    assert sorted(rows, key=repr) == sorted(want, key=repr)
 
 def test_buffered_key_strategy_reused_across_runs(spark):
     """The LRU belongs to the run's store: a second run of the same
